@@ -12,8 +12,10 @@ with a single declarative plan:
      duplicate-key set is tiny when data is mostly clean) → **broadcast**
      left join back to flag member rows — the hash-repartitioned distinct
      count of the north rule without a sort or window;
-   * referential (C6 against a dimension DataFrame) → **broadcast** left
-     join against the distinct dimension keys;
+   * referential (C6 against a dimension DataFrame) → a row-local
+     ``col IN (keys)`` flag when the dimension has at most
+     ``REF_INLINE_CAP`` distinct keys (read once per validator), otherwise a
+     **broadcast** left join against the distinct dimension keys;
 4. one aggregation producing per-partition × per-check verdict counts;
 5. violation rows as a DataFrame (keyed by the caller's key columns, e.g.
    ``doc_id`` — positional pandas indices from
@@ -34,6 +36,7 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.compiler import (
     CompiledCheck,
@@ -45,16 +48,55 @@ from ..plans.schema import ValidationSchema
 from ..utils.cache import registry as _cache
 from ..utils.reporting import CheckResult, ValidationReport
 
-__all__ = ["SparkValidator", "ValidationResult", "ValidationFailedError", "FLAG_PREFIX"]
+__all__ = [
+    "SparkValidator",
+    "ValidationResult",
+    "ValidationFailedError",
+    "FLAG_PREFIX",
+    "REF_INLINE_CAP",
+]
 
 FLAG_PREFIX = "__chk_"
 _PID = "__puv_pid"
 _ROW_OK = "__puv_row_ok"
 
+# A referential dimension with at most this many distinct non-NULL keys is
+# checked as the row-local flag ``col IN (keys)``: no join, no broadcast job
+# and no dimension scan after the first call. Larger ones keep the broadcast
+# join. Per validate of 2M rows on local[4], inline vs join: 0.33 vs 0.45 s
+# at 1,024 keys, even at 4,096, 0.62 vs 0.34 s at 15,000.
+REF_INLINE_CAP = 1024
+# a dimension whose key column Catalyst already estimates above this size is
+# joined without the bounded probe collect (it would cost one extra scan of a
+# table that large, which almost never holds few enough keys to inline)
+_REF_PROBE_BYTES = 8 << 20
+# key types whose collected Python values cross to JVM literals exactly and
+# compare like the join's equality (floating keys differ on -0.0 / NaN)
+_INLINE_KEY_TYPES = (T.IntegralType, T.DecimalType, T.StringType, T.BooleanType)
+
 _LOG = logging.getLogger(__name__)
 
 
 from ..plans.stats import plan_size_bytes as _plan_size_bytes  # noqa: E402  (shared with dedup)
+
+
+def _inline_comparable(fact: T.DataType, key: T.DataType) -> bool:
+    """True when ``fact IN (key literals)`` compares exactly like the join's
+    ``fact = key``: exact numerics of any width, or the same atomic type."""
+    exact = (T.IntegralType, T.DecimalType)
+    if isinstance(key, exact):
+        return isinstance(fact, exact)
+    return type(fact) is type(key)
+
+
+@dataclass(frozen=True)
+class _Compiled:
+    """What the schema compiles to for one input column list."""
+
+    row_checks: list[CompiledCheck]
+    global_checks: list[GlobalCheck]
+    missing: list[str]
+    flag_cols: list[Column]  # one NULL-is-FAIL flag per row check
 
 
 class ValidationFailedError(Exception):
@@ -116,12 +158,25 @@ class SparkValidator:
     Parameters
     ----------
     schema:
-        the declarative schema.
+        the declarative schema, compiled once per validator and input column
+        list (build a new validator after changing it).
     ref_checks:
-        ``{column: dimension DataFrame (or column name in it)}`` — referential
-        integrity against a dimension table executed as a broadcast anti-join
-        (C6 at scale; the north rule's "source against an allowed-values
-        dimension").
+        ``{column: dimension DataFrame | (dimension DataFrame, key column)}``
+        — referential integrity against a dimension table (C6 at scale; the
+        north rule's "source against an allowed-values dimension"; the key
+        column defaults to the dimension's first). Each dimension is read
+        ONCE per validator, on first use, by a bounded collect of at most
+        ``REF_INLINE_CAP + 1`` distinct non-NULL keys. With at most
+        ``REF_INLINE_CAP`` keys the check is the row-local flag
+        ``col IS NULL OR col IN (keys)`` — no join, and later calls never
+        scan the dimension again, so build a new validator to see a changed
+        dimension; ``violations()`` then agrees with the report even if the
+        dimension changes afterwards. Larger dimensions (or key types
+        without exact literals, e.g. floating keys) keep the broadcast left
+        join against the distinct keys, which re-reads the dimension per
+        action. The tier is reported per check in
+        ``report.metadata["referential_plan"]`` (``"inline"`` /
+        ``"broadcast"``).
     key_columns:
         stable row identity for violation reporting (e.g. ``("doc_id",)``).
     partition_by:
@@ -197,12 +252,84 @@ class SparkValidator:
         self.stats_broadcast_bytes = int(stats_broadcast_bytes)
         # filled per annotate() call: {check_name: "broadcast" | "shuffle"}
         self.unique_join_plan: dict[str, str] = {}
+        # filled per annotate() call: {check_name: "inline" | "broadcast"}
+        self.referential_plan: dict[str, str] = {}
         # filled per annotate() call: human-readable contract caveats
         # (e.g. unique skipped on a stream) — surfaced in report.warnings
         self.warnings: list[str] = []
         # dup-key sets cached by the "auto" strategy; released on the next
         # annotate() (unpersist only drops the cache — recompute is safe)
         self._persisted: list[DataFrame] = []
+        # per-validator invariants, resolved on first use: the compiled
+        # schema per input column list, the row-ok/verdict columns per flag
+        # list, and each dimension's inline key test (None = join tier)
+        self._compiled_by_cols: dict[tuple[str, ...], _Compiled] = {}
+        self._by_flags: dict[tuple[str, ...], tuple[Column, list[Column]]] = {}
+        self._ref_inline: dict[str, tuple[Column, T.DataType] | None] = {}
+
+    def _compiled(self, columns: Sequence[str]) -> _Compiled:
+        """``compile_schema`` once per input column list (the schema is read
+        once per validator, like the dimensions)."""
+        key = tuple(columns)
+        hit = self._compiled_by_cols.get(key)
+        if hit is None:
+            row_checks, global_checks, missing = compile_schema(self.schema, columns)
+            # NULL check result (possible from custom SQL/UDF) counts as FAIL,
+            # matching pandera's treatment of non-boolean check output.
+            flag_cols = [
+                F.coalesce(chk.expr, F.lit(False)).alias(FLAG_PREFIX + chk.name)
+                for chk in row_checks
+            ]
+            hit = _Compiled(row_checks, global_checks, missing, flag_cols)
+            self._compiled_by_cols[key] = hit
+        return hit
+
+    def _flag_columns(self, flag_names: tuple[str, ...]) -> tuple[Column, list[Column]]:
+        """(row-ok column, verdict aggregates) for one flag list."""
+        hit = self._by_flags.get(flag_names)
+        if hit is None:
+            flags = [F.col(FLAG_PREFIX + n) for n in flag_names]
+            row_ok = reduce(lambda a, b: a & b, flags) if flags else F.lit(True)
+            aggs = [
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum((~F.col(_ROW_OK)).cast("long")).alias("n_invalid_rows"),
+            ] + [F.sum((~f).cast("long")).alias(n) for f, n in zip(flags, flag_names)]
+            hit = self._by_flags[flag_names] = (row_ok, aggs)
+        return hit
+
+    def _dimension(self, col: str) -> tuple[DataFrame, str]:
+        dim = self.ref_checks[col]
+        return dim if isinstance(dim, tuple) else (dim, dim.columns[0])
+
+    def _inline_keys(self, col: str) -> tuple[Column, T.DataType] | None:
+        """``(col IN (keys), key type)`` when ``ref_checks[col]`` has at most
+        ``REF_INLINE_CAP`` distinct non-NULL keys, else None (join tier).
+        Resolved by a bounded collect on first use, then kept."""
+        if col not in self._ref_inline:
+            dim_df, dim_col = self._dimension(col)
+            keys = dim_df.select(F.col(dim_col).alias("__ref_key"))
+            key_type = keys.schema["__ref_key"].dataType
+            size = _plan_size_bytes(keys)
+            inline = None
+            if (
+                isinstance(key_type, _INLINE_KEY_TYPES)
+                and not dim_df.isStreaming
+                and (size is None or size <= _REF_PROBE_BYTES)
+            ):
+                nn = keys.filter(F.col("__ref_key").isNotNull())
+                # a row probe stops after CAP + 1 rows (no shuffle, no full
+                # scan); only repeated keys need the exact distinct pass
+                rows = nn.limit(REF_INLINE_CAP + 1).collect()
+                values = list(dict.fromkeys(r[0] for r in rows))
+                if len(rows) > REF_INLINE_CAP >= len(values):
+                    values = [r[0] for r in nn.distinct().limit(REF_INLINE_CAP + 1).collect()]
+                if len(values) <= REF_INLINE_CAP:
+                    # one JVM call for the whole key list (Column.isin makes
+                    # one per literal, ~0.5 ms each)
+                    test = F.col(col)._jc.isInCollection(values)
+                    inline = (Column(test), key_type)
+            self._ref_inline[col] = inline
+        return self._ref_inline[col]
 
     # ------------------------------------------------------------------ #
     def annotate(
@@ -210,30 +337,27 @@ class SparkValidator:
     ) -> tuple[DataFrame, list[CompiledCheck], list[str]]:
         """Input df → df + one boolean flag column per check (TRUE = pass).
 
-        Row-local checks are pure expressions (one codegen stage); unique and
-        referential checks become broadcast-join-produced flags.
+        Row-local checks are pure expressions (one codegen stage); unique
+        checks become broadcast-join-produced flags, referential checks an
+        inline key test or a broadcast join (see ``ref_checks``).
         ``_skip_unique`` omits the unique-join flags entirely — the
         count-only ``check_counts`` path computes unique totals as direct
         aggregates instead (no dup-key materialization, no join-back).
         """
-        row_checks, global_checks, missing = compile_schema(self.schema, df.columns)
+        compiled = self._compiled(df.columns)
+        global_checks = compiled.global_checks
         if _skip_unique:
             global_checks = [g for g in global_checks if g.check != "unique"]
         self.unique_join_plan = {}
+        self.referential_plan = {}
         self.warnings = []
         for cached in self._persisted:
             _cache.release(cached)
         self._persisted = []
-        annotated = df.withColumn(_PID, F.spark_partition_id())
-
-        flag_cols: list[Column] = []
-        names: list[CompiledCheck] = []
-        for chk in row_checks:
-            # NULL check result (possible from custom SQL/UDF) counts as FAIL,
-            # matching pandera's treatment of non-boolean check output.
-            flag_cols.append(F.coalesce(chk.expr, F.lit(False)).alias(FLAG_PREFIX + chk.name))
-            names.append(chk)
-        annotated = annotated.select("*", *flag_cols)
+        annotated = df.withColumn(_PID, F.spark_partition_id()).select(
+            "*", *compiled.flag_cols
+        )
+        names: list[CompiledCheck] = list(compiled.row_checks)
 
         # unique (C8): dup-key set via partial-agg groupBy → broadcast join.
         for g in global_checks:
@@ -324,40 +448,42 @@ class SparkValidator:
             ).drop("__dup_key")
             names.append(CompiledCheck(g.name, col, F.col(FLAG_PREFIX + g.name), "unique"))
 
-        # referential (C6 vs dimension): broadcast left join on distinct keys.
-        for col, dim in self.ref_checks.items():
-            if isinstance(dim, tuple):
-                dim_df, dim_col = dim
-            else:
-                dim_df, dim_col = dim, dim.columns[0]
+        # referential (C6 vs dimension): inline key test for small
+        # dimensions, else broadcast left join on distinct keys. A NULL fk
+        # passes either way (nullability is its own check).
+        fields = {f.name: f.dataType for f in df.schema.fields}
+        for col in self.ref_checks:
             name = f"{col}__referential"
-            keys = dim_df.select(F.col(dim_col).alias("__ref_key")).distinct()
-            annotated = annotated.join(
-                F.broadcast(keys),
-                on=annotated[col] == F.col("__ref_key"),
-                how="left",
-            ).withColumn(
-                # NULL fk passes (nullability is its own check)
-                FLAG_PREFIX + name,
-                F.col(col).isNull() | F.col("__ref_key").isNotNull(),
-            ).drop("__ref_key")
+            inline = self._inline_keys(col)
+            if inline is not None and _inline_comparable(fields.get(col), inline[1]):
+                annotated = annotated.withColumn(
+                    FLAG_PREFIX + name,
+                    F.col(col).isNull() | F.coalesce(inline[0], F.lit(False)),
+                )
+                self.referential_plan[name] = "inline"
+            else:
+                dim_df, dim_col = self._dimension(col)
+                keys = dim_df.select(F.col(dim_col).alias("__ref_key")).distinct()
+                annotated = annotated.join(
+                    F.broadcast(keys),
+                    on=annotated[col] == F.col("__ref_key"),
+                    how="left",
+                ).withColumn(
+                    FLAG_PREFIX + name,
+                    F.col(col).isNull() | F.col("__ref_key").isNotNull(),
+                ).drop("__ref_key")
+                self.referential_plan[name] = "broadcast"
             names.append(CompiledCheck(name, col, F.col(FLAG_PREFIX + name), "referential"))
 
-        all_flags = [FLAG_PREFIX + c.name for c in names]
-        row_ok = (
-            reduce(lambda a, b: a & b, [F.col(f) for f in all_flags])
-            if all_flags
-            else F.lit(True)
-        )
+        row_ok, _aggs = self._flag_columns(tuple(c.name for c in names))
         annotated = annotated.withColumn(_ROW_OK, row_ok)
-        return annotated, names, missing
+        return annotated, names, compiled.missing
 
     # ------------------------------------------------------------------ #
     def validate(self, df: DataFrame) -> ValidationResult:
         t0 = time.time()
         schema_errors = [
-            f"column {m!r} missing from input" for m in
-            compile_schema(self.schema, df.columns)[2]
+            f"column {m!r} missing from input" for m in self._compiled(df.columns).missing
         ]
         schema_errors += dtype_errors(self.schema, df)
         if self.schema.strict:
@@ -369,12 +495,7 @@ class SparkValidator:
 
         pid = F.col(self.partition_by) if self.partition_by else F.col(_PID)
         # ONE aggregation job: per-partition totals + per-check fail counts.
-        aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(_ROW_OK)).cast("long")).alias("n_invalid_rows"),
-        ] + [
-            F.sum((~F.col(FLAG_PREFIX + n)).cast("long")).alias(n) for n in flag_names
-        ]
+        _row_ok, aggs = self._flag_columns(tuple(flag_names))
         wide = annotated.groupBy(pid.alias("partition_id")).agg(*aggs)
         # long-format verdict DataFrame for downstream use / persistence
         if flag_names:
@@ -464,6 +585,11 @@ class SparkValidator:
                     if self.unique_join_plan
                     else {}
                 ),
+                **(
+                    {"referential_plan": dict(self.referential_plan)}
+                    if self.referential_plan
+                    else {}
+                ),
             },
         )
         result = ValidationResult(
@@ -494,10 +620,9 @@ class SparkValidator:
         flag_names = [c.name for c in checks]
         uniq = []
         if skip_unique:
-            _, global_checks, _m = compile_schema(self.schema, df.columns)
             uniq = [
                 g
-                for g in global_checks
+                for g in self._compiled(df.columns).global_checks
                 if g.check == "unique" and g.column in df.columns
             ]
         if not flag_names and not uniq:

@@ -132,7 +132,8 @@ SELECT 'o_orderpriority__isin',
 """
 
 
-# C6-at-scale: referential integrity against a dimension (broadcast anti-join)
+# C6-at-scale: referential integrity against a dimension (the 25-key nation
+# dimension as an inline IN set, the customer dimension as a broadcast join)
 def q_check_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     customer_chk = SparkValidator(

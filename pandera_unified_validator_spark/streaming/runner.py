@@ -76,6 +76,10 @@ class PartitionedValidationRunner:
     (``core/streaming.py:120-124``): ``error_threshold`` (default 0.05),
     ``files_per_group`` replaces chunk_size, ``progress_callback`` fires per
     group with (group_index, n_groups, metrics).
+
+    One validator serves every group, so what it resolves once (the compiled
+    schema, small referential dimensions) is shared by the whole run; group
+    reads use the table's schema (see ``run``).
     """
 
     def __init__(
@@ -235,22 +239,28 @@ class PartitionedValidationRunner:
         fmt: str = "parquet",
         **reader_options,
     ) -> StreamingResult:
-        """Validate ``path`` (file/dir/glob) group-by-group."""
+        """Validate ``path`` (file/dir/glob) group-by-group.
+
+        The table's schema is resolved once, from the whole ``path``, and
+        every group is read with it: no group runs its own schema-inference
+        job, and each group's verdicts are computed against the same column
+        types whatever ``files_per_group`` is. A local directory path is also
+        each group's ``basePath``, so partition columns discovered from the
+        directory layout (``.../source=web/...``) are read the same way in
+        every group."""
         base = spark.read.format(fmt).options(**reader_options).load(path)
         files = sorted(base.inputFiles())
         if not files:
             return self.run_dataframe_groups(spark, [base])
+        group_options = dict(reader_options)
+        if os.path.isdir(path):
+            group_options.setdefault("basePath", path)
+        reader = spark.read.format(fmt).schema(base.schema).options(**group_options)
         groups = [
             files[i : i + self.files_per_group]
             for i in range(0, len(files), self.files_per_group)
         ]
-        units = [
-            (
-                tuple(g),
-                lambda g=g: spark.read.format(fmt).options(**reader_options).load(g),
-            )
-            for g in groups
-        ]
+        units = [(tuple(g), lambda g=g: reader.load(g)) for g in groups]
         return self._run_units(units)
 
     def run_iceberg(

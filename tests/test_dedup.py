@@ -502,23 +502,13 @@ def test_connected_components_warns_on_non_convergence(spark, caplog):
 
     from pandera_unified_validator_spark.operators.dedup import connected_components
 
-    import logging
-
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
-    # configure_logging (exercised by other tests) turns propagation off for
-    # the package logger; caplog needs it on to capture — restore after
-    pkg = logging.getLogger("pandera_unified_validator_spark")
-    prev = pkg.propagate
-    pkg.propagate = True
-    try:
-        with caplog.at_level("WARNING", logger="pandera_unified_validator_spark"):
-            comp = {r["id"]: r["component"] for r in
-                    connected_components(pairs, max_iterations=1,
-                                         small_graph_edges=None).collect()}
-    finally:
-        pkg.propagate = prev
+    with caplog.at_level("WARNING", logger="pandera_unified_validator_spark"):
+        comp = {r["id"]: r["component"] for r in
+                connected_components(pairs, max_iterations=1,
+                                     small_graph_edges=None).collect()}
     assert len(set(comp.values())) > 1  # genuinely under-merged
     assert any("UNDER-merged" in rec.message for rec in caplog.records)
     with pytest.raises(RuntimeError, match="UNDER-merged"):

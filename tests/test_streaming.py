@@ -419,3 +419,105 @@ def test_resume_invalidated_by_schema_change(spark, tmp_path):
     ).run(spark, src)
     assert all(g.resumed for g in r3.groups)          # same contract resumes
     assert r3.metrics.invalid_rows == 10
+
+
+def _totals(metrics):
+    return metrics.total_rows, metrics.invalid_rows, dict(metrics.common_errors)
+
+
+def test_runner_groups_match_whole_table_and_skip_inference(spark, tmp_path):
+    """Every group is read with the table's schema: the run starts no
+    schema-inference job beyond the one for the whole path, and the totals
+    for any files_per_group equal one whole-table validate (the dirty
+    table's duplicate pairs never straddle a file at this size)."""
+    p = str(tmp_path / "tok")
+    token_table(spark, 2000, dirty=True, num_partitions=4).write.parquet(p)
+    whole = SparkValidator(
+        token_schema(), ref_checks={"source": source_dim(spark)}
+    ).validate(spark.read.parquet(p)).report
+    want = (
+        whole.n_rows,
+        whole.n_invalid_rows,
+        {c.name: c.n_failed for c in whole.checks if c.n_failed},
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    base_jobs = jobs("read_whole", lambda: spark.read.parquet(p))
+    for fpg in (1, 2, 4):
+        validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+        validate = validator.validate
+
+        def tagged(df, validate=validate):
+            # the validation's own jobs go to another group: what is left
+            # in "reads" is what the runner's reads start
+            sc.setJobGroup("validate", "validate")
+            try:
+                return validate(df)
+            finally:
+                sc.setJobGroup(f"reads_{fpg}", "reads")
+
+        validator.validate = tagged
+        runner = PartitionedValidationRunner(
+            validator, files_per_group=fpg, error_threshold=None
+        )
+        out = []
+        assert jobs(f"reads_{fpg}", lambda: out.append(runner.run(spark, p))) == base_jobs
+        res = out[0]
+        assert len(res.groups) == -(-4 // fpg)
+        assert _totals(res.metrics) == want, fpg
+
+
+def test_runner_partitioned_layout_reads_partition_columns(spark, tmp_path):
+    """A directory partitioned by a checked column: every group still sees
+    that column (read with the table's schema and basePath), so the totals
+    equal the whole-table validate instead of NULL-filled partition keys."""
+    p = str(tmp_path / "by_source")
+    token_table(spark, 1200, dirty=True, num_partitions=2).write.partitionBy(
+        "source"
+    ).parquet(p)
+    v = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+    whole = v.validate(spark.read.parquet(p)).report
+    res = PartitionedValidationRunner(v, files_per_group=1, error_threshold=None).run(spark, p)
+    assert len(res.groups) > 1 and res.report.errors == ()
+    # unique is per group, so compare the row-local and referential checks
+    got = {c: n for c, n in res.metrics.common_errors.items() if "unique" not in c}
+    want = {c.name: c.n_failed for c in whole.checks if c.n_failed and c.check != "unique"}
+    assert res.metrics.total_rows == whole.n_rows and got == want
+    assert want["source__referential"] > 0
+
+
+def test_lineage_record_from_earlier_version_resumes(spark, tmp_path):
+    """The schema fingerprint is pinned: a lineage record written with the
+    same contract by an earlier version of the runner still resumes."""
+    p = str(tmp_path / "tok")
+    token_table(spark, 400, dirty=True, num_partitions=1).write.parquet(p)
+    files = sorted(spark.read.parquet(p).inputFiles())
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    record = {
+        "group_id": 0,
+        "files": files,
+        "n_rows": 400,
+        "n_invalid_rows": 3,
+        "check_fails": {"n_tok__le": 3},
+        "elapsed_sec": 1.0,
+        "schema_fp": "1274ad0571b99e44",
+    }
+    (ckpt / "group-000000.json").write_text(json.dumps(record))
+    runner = PartitionedValidationRunner(
+        SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)}),
+        checkpoint_dir=str(ckpt),
+        error_threshold=None,
+    )
+    assert runner._schema_fingerprint() == "1274ad0571b99e44"
+    res = runner.run(spark, p)
+    assert [g.resumed for g in res.groups] == [True]
+    assert _totals(res.metrics) == (400, 3, {"n_tok__le": 3})

@@ -311,13 +311,26 @@ def test_console_sections_logging_and_reference_export(spark, dirty):
     }
     assert rd["summary"]["total_errors"] == len(rd["errors"]) > 0
 
+    import logging
+
     from pandera_unified_validator_spark import configure_logging, get_logger
 
-    lg = configure_logging(level="DEBUG")
-    assert lg.level == 10 and len(lg.handlers) == 1
-    configure_logging(level="INFO")  # idempotent: handlers replaced
-    assert len(lg.handlers) == 1
-    assert get_logger("x").name.endswith(".x")
+    # configure_logging turns propagation off and swaps the handlers of the
+    # package logger; restore them so later tests' caplog still captures
+    pkg = logging.getLogger("pandera_unified_validator_spark")
+    level, handlers, propagate = pkg.level, list(pkg.handlers), pkg.propagate
+    try:
+        lg = configure_logging(level="DEBUG")
+        assert lg.level == 10 and len(lg.handlers) == 1
+        configure_logging(level="INFO")  # idempotent: handlers replaced
+        assert len(lg.handlers) == 1
+        assert get_logger("x").name.endswith(".x")
+    finally:
+        for h in pkg.handlers:
+            h.close()
+        pkg.handlers[:] = handlers
+        pkg.setLevel(level)
+        pkg.propagate = propagate
 
 
 def test_unique_auto_stats_fast_path(spark, tmp_path):
@@ -418,3 +431,115 @@ def test_check_counts_count_only_unique_matches_validate(spark):
     # v all-unique -> 0
     assert counts["k__unique"] == (2, 6)
     assert counts["v__unique"] == (0, 6)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a Spark job group; returns (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_dimension_read_once_per_validator(spark, tmp_path):
+    """A dimension under REF_INLINE_CAP is read by one bounded collect on the
+    validator's first call; later calls run no job for it, never plan a scan
+    of it, and give the same verdicts as a fresh validator per input."""
+    dim_path = str(tmp_path / "dim")
+    source_dim(spark).write.parquet(dim_path)
+    dim = spark.read.parquet(dim_path)
+    inputs = [
+        token_table(spark, 1500, dirty=True, seed=s, num_partitions=2).cache()
+        for s in (1, 2, 3, 4)
+    ]
+    shared = SparkValidator(token_schema(), ref_checks={"source": dim})
+    jobs = []
+    for i, df in enumerate(inputs):
+        res, n = _jobs_in_group(spark, f"ref_once_{i}", lambda: shared.validate(df))
+        jobs.append(n)
+        assert res.report.metadata["referential_plan"] == {"source__referential": "inline"}
+        plan = res.flags._jdf.queryExecution().optimizedPlan().toString()
+        assert dim_path not in plan
+        fresh = SparkValidator(token_schema(), ref_checks={"source": dim}).validate(df)
+        assert [(c.name, c.n_failed) for c in res.report.checks] == [
+            (c.name, c.n_failed) for c in fresh.report.checks
+        ]
+        assert res.report.n_invalid_rows == fresh.report.n_invalid_rows
+        assert res.violations().count() == res.report.n_invalid_rows
+    # the first call's extra jobs are exactly the bounded collect's
+    _, probe = _jobs_in_group(
+        spark,
+        "ref_probe",
+        lambda: SparkValidator(token_schema(), ref_checks={"source": dim})._inline_keys("source"),
+    )
+    assert probe >= 1 and jobs[0] == jobs[1] + probe and len(set(jobs[1:])) == 1, jobs
+    for df in inputs:
+        df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "fact, fact_type, keys, key_type, n_bad",
+    [
+        # NULL fk passes; NULL key inside the dimension matches nothing;
+        # an int fact column against a bigint dimension compares by value
+        ([1, 2, 3, None, 7], "int", [1, 2, None, 5], "bigint", 2),
+        (["a", "b", None, "zz"], "string", ["a", None, "b"], "string", 1),
+        ([1, 2], "bigint", [], "int", 2),
+    ],
+)
+def test_referential_inline_matches_broadcast(
+    spark, monkeypatch, fact, fact_type, keys, key_type, n_bad
+):
+    """The inline key test and the broadcast join count the same failures
+    and the same violation rows on NULLs, widened ints and string keys."""
+    import pandera_unified_validator_spark.operators.validator as vmod
+
+    df = spark.createDataFrame([(v,) for v in fact], f"k {fact_type}")
+    dim = spark.createDataFrame([(v,) for v in keys], f"key {key_type}")
+    schema = SchemaBuilder("t").column("k", "int" if fact_type != "string" else "str").build()
+
+    def run():
+        v = SparkValidator(schema, ref_checks={"k": dim})
+        res = v.validate(df)
+        counts = {r["check"]: r["n_failed"] for r in v.check_counts(df).collect()}
+        return (
+            res.report.metadata["referential_plan"]["k__referential"],
+            {c.name: c.n_failed for c in res.report.checks},
+            res.violations().count(),
+            counts,
+        )
+
+    inline = run()
+    monkeypatch.setattr(vmod, "REF_INLINE_CAP", -1)  # every dimension joins
+    joined = run()
+    assert inline[0] == "inline" and joined[0] == "broadcast"
+    assert inline[1:] == joined[1:]
+    assert inline[1]["k__referential"] == inline[2] == n_bad
+
+
+def test_referential_tier_above_cap_and_unsafe_types(spark, monkeypatch):
+    """A dimension with more than REF_INLINE_CAP distinct keys keeps the
+    broadcast join (repeated keys do not count), and so do key types whose literals do not compare like the join
+    (floating keys, or a string fact column against int keys)."""
+    import pandera_unified_validator_spark.operators.validator as vmod
+
+    monkeypatch.setattr(vmod, "REF_INLINE_CAP", 4)
+    df = spark.createDataFrame(
+        [(i, float(i), str(i)) for i in range(8)], "k int, f double, s string"
+    )
+    schema = SchemaBuilder("t").column("k", "int").build()
+
+    def plan(dim, col="k"):
+        res = SparkValidator(schema, ref_checks={col: dim}).validate(df)
+        got = res.report.metadata["referential_plan"][f"{col}__referential"]
+        return got, {c.name: c.n_failed for c in res.report.checks}[f"{col}__referential"]
+
+    assert plan(spark.range(5).toDF("key")) == ("broadcast", 3)      # 5 keys > 4
+    assert plan(spark.range(4).toDF("key")) == ("inline", 4)
+    # more rows than the cap, but only 3 distinct keys: still inline
+    assert plan(spark.range(12).selectExpr("id % 3 AS key")) == ("inline", 5)
+    assert plan(spark.range(4).selectExpr("double(id) AS key"), "f") == ("broadcast", 4)
+    assert plan(spark.range(4).toDF("key"), "s") == ("broadcast", 4)

@@ -61,8 +61,9 @@ def main() -> None:
         (
             "Full-check verdict aggregation (the flagship job)",
             "One scan computes every row-local check; the duplicate-key branch "
-            "prunes to doc_id-only with a pushed IsNotNull; both global checks "
-            "are broadcast joins; one exchange for the final aggregate.",
+            "prunes to doc_id-only with a pushed IsNotNull; unique is a "
+            "broadcast join, the 5-key source dimension an inline IN set (no "
+            "join); one exchange for the final aggregate.",
             plan_of(annotated.agg(*aggs)),
         )
     )

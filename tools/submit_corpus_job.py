@@ -247,6 +247,7 @@ def main() -> int:
         stages["tokens_total"] = int(b["nt"])
         extra_tok = {
             "bpe_vocab_size": model.vocab_size,
+            "pad_id": model.vocab_size,
             "bins_truncated": int(b["trunc"]),
             "bins_checksum": int(chk),
             "bin_utilization": round(
