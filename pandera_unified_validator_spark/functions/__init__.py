@@ -1,5 +1,5 @@
-"""Reusable column-function library (JVM-side expressions + Arrow UDFs)."""
+"""Reusable column-function library (Arrow vector UDFs)."""
 
-from .vectors import cosine, cosine_pandas_udf, dot, hyperplane_signature_udf, l2_norm
+from .vectors import cosine_pandas_udf, hyperplane_signature_udf
 
-__all__ = ["dot", "l2_norm", "cosine", "cosine_pandas_udf", "hyperplane_signature_udf"]
+__all__ = ["cosine_pandas_udf", "hyperplane_signature_udf"]

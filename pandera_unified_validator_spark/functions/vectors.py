@@ -1,47 +1,20 @@
 """Vector column functions over ``array<float>`` embeddings.
 
-Pure-Column implementations use zip_with/aggregate (interpreted HOFs — fine
-for one-off scoring); the Arrow/pandas variants (``*_pandas``) are the hot
-path for corpus-scale similarity work (numpy SIMD per Arrow batch, no per-row
-Python — the vectorized-UDF discipline of the input_hint).
+Arrow/pandas UDFs only: numpy matmul per Arrow batch, no per-row Python.
+They serve the corpus-scale similarity work in ``operators/similarity.py``,
+``dedup.py`` and ``clustering.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
-    "dot",
-    "l2_norm",
-    "cosine",
     "cosine_pandas_udf",
     "hyperplane_signature_udf",
     "hyperplane_signature2_udf",
 ]
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL when either norm is 0."""
-    num = dot(a, b)
-    den = l2_norm(a) * l2_norm(b)
-    return F.when(den > 0, num / den)
 
 
 def cosine_pandas_udf():

@@ -200,16 +200,12 @@ class SparkValidator:
     ) -> None:
         """``unique_strategy``:
 
-        * ``"direct"`` — groupBy the key itself. Shuffle carries the full key
-          (~30+ B for doc_id strings at 10^12 rows). Dup-key set broadcast.
-        * ``"hash_prefilter"`` — shuffle only ``xxhash64(key)`` (8 B fixed) to
-          find duplicate *hashes*, then exact-verify just those candidate
-          rows (semi-join + tiny groupBy). ~4x less shuffle for string keys;
-          64-bit collisions only ever ADD candidates (n²/2⁶⁵ expected — a
-          few 10k at 10^12 rows), never lose a duplicate, and the exact pass
-          removes them. Correct for mostly-clean data; with huge duplicate
-          sets the candidate broadcast degrades — keep "direct" there.
-        * ``"auto"`` — two tiers, both exact-safe:
+        * ``"direct"`` — one lazy plan: groupBy the key, keep the keys seen
+          more than once, broadcast that dup-key set back onto the rows. The
+          shuffle carries the full key; the broadcast is unbounded, so a
+          heavily duplicated huge input can exhaust the driver.
+        * ``"auto"`` — the ``"direct"`` plan, guarded in two tiers, both
+          exact-safe:
 
           1. *Catalyst-stats fast path*: when the input relation's
              plan-estimated size is ≤ ``stats_broadcast_bytes`` (32 MB —
@@ -238,7 +234,7 @@ class SparkValidator:
           plan; the chosen join shape is surfaced per check in
           ``report.metadata["unique_join_plan"]``.
         """
-        if unique_strategy not in ("direct", "hash_prefilter", "auto"):
+        if unique_strategy not in ("direct", "auto"):
             raise ValueError(f"unknown unique_strategy {unique_strategy!r}")
         self.schema = schema
         self.ref_checks = dict(ref_checks or {})
@@ -380,65 +376,33 @@ class SparkValidator:
                 continue
             col = g.column
             nn = df.filter(F.col(col).isNotNull())
-            strategy = self.unique_strategy
+            dup_keys = (
+                nn.groupBy(col)
+                .agg(F.count(F.lit(1)).alias("__dup_n"))
+                .filter(F.col("__dup_n") > 1)
+                .select(F.col(col).alias("__dup_key"))
+            )
             use_broadcast = True
-            dup_keys: DataFrame | None = None
-            if strategy == "auto":
+            if self.unique_strategy == "auto":
                 # tier 1: Catalyst-stats fast path — plan-estimated relation
                 # bytes (file sizes / cached bytes; NO job) small enough
                 # that even an all-duplicates dup-key set broadcasts safely.
                 # Also bounded by broadcast_dup_limit (≥8 B per key) so a
                 # caller-tightened limit still forces the exact tier.
                 size = _plan_size_bytes(df)
-                if size is not None and size <= min(
+                if size is None or size > min(
                     self.stats_broadcast_bytes, self.broadcast_dup_limit * 8
                 ):
-                    strategy = "direct"
-                else:
                     # tier 2: eager dup-key job — the column-pruned scan +
                     # map-side-combined groupBy the join-back needs anyway,
                     # cached, so the EXACT dup-key count picks the join
                     # shape with no extra input scan (round 3's separate
                     # approx_count_distinct estimate job was a third scan:
                     # +64% check_unique wall)
-                    dup_keys = _cache.persist(
-                        nn.groupBy(col)
-                        .agg(F.count(F.lit(1)).alias("__dup_n"))
-                        .filter(F.col("__dup_n") > 1)
-                        .select(F.col(col).alias("__dup_key")),
-                        f"SparkValidator.dup_keys.{g.name}",
-                    )
+                    dup_keys = _cache.persist(dup_keys, f"SparkValidator.dup_keys.{g.name}")
                     self._persisted.append(dup_keys)
                     use_broadcast = dup_keys.count() <= self.broadcast_dup_limit
-                    strategy = "direct"
             self.unique_join_plan[g.name] = "broadcast" if use_broadcast else "shuffle"
-            if strategy == "hash_prefilter":
-                # stage 1: duplicate HASHES — the shuffle carries 8 bytes/row
-                dup_hashes = (
-                    nn.groupBy(F.xxhash64(col).alias("__kh"))
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select("__kh")
-                )
-                # stage 2: exact verify only candidate rows (collisions drop)
-                cand = nn.join(
-                    F.broadcast(dup_hashes),
-                    F.xxhash64(nn[col]) == F.col("__kh"),
-                    "left_semi",
-                )
-                dup_keys = (
-                    cand.groupBy(col)
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select(F.col(col).alias("__dup_key"))
-                )
-            elif dup_keys is None:
-                dup_keys = (
-                    nn.groupBy(col)
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select(F.col(col).alias("__dup_key"))
-                )
             annotated = annotated.join(
                 F.broadcast(dup_keys) if use_broadcast else dup_keys,
                 on=annotated[col] == F.col("__dup_key"),

@@ -91,6 +91,8 @@ class PartitionedValidationRunner:
         files_per_group: int = 8,
         progress_callback: Callable[[int, int, ValidationMetrics], None] | None = None,
     ) -> None:
+        if files_per_group < 1:
+            raise ValueError(f"files_per_group must be >= 1, got {files_per_group}")
         self.validator = validator
         self.checkpoint_dir = checkpoint_dir
         self.error_threshold = error_threshold
@@ -181,18 +183,19 @@ class PartitionedValidationRunner:
     # --------------------------------------------------------------- run --
     def _run_units(
         self,
-        units: Sequence[tuple[tuple[str, ...], Callable[[], DataFrame]]],
+        units: Sequence[tuple[tuple[str, ...] | None, Callable[[], DataFrame]]],
     ) -> StreamingResult:
-        """Shared group loop: each unit = (lineage marker, lazy loader).
-        Finished markers resume from checkpoint; the breaker stops scheduling
-        further units once the error rate trips (reference
-        core/streaming.py:424-426)."""
+        """The one group loop: each unit = (lineage marker, lazy loader).
+        Finished markers resume from checkpoint; a ``None`` marker has no
+        lineage (nothing loaded or written, ``GroupResult.files == ()``).
+        The breaker stops scheduling further units once the error rate trips
+        (reference core/streaming.py:424-426)."""
         metrics = ValidationMetrics()
         out = StreamingResult(metrics=metrics)
         t_start = time.time()
         report: ValidationReport | None = None
         for gi, (markers, loader) in enumerate(units):
-            cached = self._load_lineage(gi, markers)
+            cached = None if markers is None else self._load_lineage(gi, markers)
             if cached is not None:
                 metrics.update(
                     cached.n_rows - cached.n_invalid_rows,
@@ -205,7 +208,7 @@ class PartitionedValidationRunner:
                 res = self.validator.validate(loader())
                 gr = GroupResult(
                     group_id=gi,
-                    files=tuple(markers),
+                    files=tuple(markers or ()),
                     n_rows=res.report.n_rows,
                     n_invalid_rows=res.report.n_invalid_rows,
                     check_fails={
@@ -213,7 +216,8 @@ class PartitionedValidationRunner:
                     },
                     elapsed_sec=round(time.time() - t0, 3),
                 )
-                self._write_lineage(gr)
+                if markers is not None:
+                    self._write_lineage(gr)
                 metrics.update(
                     gr.n_rows - gr.n_invalid_rows, gr.n_invalid_rows, gr.check_fails
                 )
@@ -324,32 +328,7 @@ class PartitionedValidationRunner:
     def run_dataframe_groups(
         self, spark: SparkSession, dfs: Sequence[DataFrame]
     ) -> StreamingResult:
-        """Validate pre-split DataFrames (micro-batches, S4 analogue)."""
-        metrics = ValidationMetrics()
-        out = StreamingResult(metrics=metrics)
-        t_start = time.time()
-        for gi, df in enumerate(dfs):
-            t0 = time.time()
-            res = self.validator.validate(df)
-            gr = GroupResult(
-                group_id=gi,
-                files=(),
-                n_rows=res.report.n_rows,
-                n_invalid_rows=res.report.n_invalid_rows,
-                check_fails={c.name: c.n_failed for c in res.report.checks if c.n_failed},
-                elapsed_sec=round(time.time() - t0, 3),
-            )
-            metrics.update(gr.n_rows - gr.n_invalid_rows, gr.n_invalid_rows, gr.check_fails)
-            out.groups.append(gr)
-            out.report = res.report if out.report is None else out.report.merge(res.report)
-            if self.progress_callback:
-                self.progress_callback(gi + 1, len(dfs), metrics)
-            if (
-                self.error_threshold is not None
-                and metrics.total_rows > 0
-                and metrics.error_rate > self.error_threshold
-            ):
-                metrics.early_terminated = True
-                break
-        metrics.elapsed_sec = round(time.time() - t_start, 3)
-        return out
+        """Validate pre-split DataFrames (micro-batches, S4 analogue) through
+        the group loop. A DataFrame has no stable identity to resume by, so
+        no lineage is read or written: every call validates every batch."""
+        return self._run_units([(None, lambda df=df: df) for df in dfs])

@@ -25,7 +25,7 @@ __all__ = [
     "expected_dirty_counts",
 ]
 
-# hot-key distribution for skew tests: "web" ≈ 70% (FIXTURES.md F1)
+# hot-key distribution: "web" ≈ 70% (FIXTURES.md F1)
 SOURCES = ("web", "books", "code", "wiki", "academic")
 VOCAB_SIZE = 50257
 MAX_TOK = 8192

@@ -1,4 +1,4 @@
-"""Skew utilities + CLI surface tests."""
+"""CLI surface tests."""
 
 import json
 import subprocess
@@ -6,45 +6,6 @@ import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-from pandera_unified_validator_spark.functions.skew import (
-    salted_group_count,
-    salted_repartition,
-    with_salt,
-)
-from pandera_unified_validator_spark.tokens import token_table
-
-
-def test_salted_group_count_equivalence(spark):
-    # 70% hot key 'web' — the exact skew profile of the token table
-    df = token_table(spark, 5000)
-    plain = {r["source"]: r["count"] for r in df.groupBy("source").count().collect()}
-    salted = {
-        r["source"]: r["count"]
-        for r in salted_group_count(df, "source", buckets=16).collect()
-    }
-    assert salted == plain
-    assert plain["web"] > 0.6 * 5000  # the hot key really is hot
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    df = token_table(spark, 4000).filter(F.col("source") == "web")
-    # plain repartition by the hot key: every row lands in ONE partition
-    plain = df.repartition(16, "source").withColumn(
-        "p", F.spark_partition_id()
-    ).select("p").distinct().count()
-    salted = salted_repartition(df, "source", buckets=16, num_partitions=16).withColumn(
-        "p", F.spark_partition_id()
-    ).select("p").distinct().count()
-    assert plain == 1
-    assert salted >= 8  # hot key spread over most partitions
-
-
-def test_with_salt_deterministic(spark):
-    df = token_table(spark, 100)
-    a = with_salt(df, 8, deterministic_by="doc_id").select("doc_id", "__salt")
-    b = with_salt(df, 8, deterministic_by="doc_id").select("doc_id", "__salt")
-    assert a.exceptAll(b).count() == 0
 
 
 @pytest.fixture(scope="module")

@@ -521,3 +521,60 @@ def test_lineage_record_from_earlier_version_resumes(spark, tmp_path):
     res = runner.run(spark, p)
     assert [g.resumed for g in res.groups] == [True]
     assert _totals(res.metrics) == (400, 3, {"n_tok__le": 3})
+
+
+@pytest.mark.parametrize("fpg", [0, -1])
+def test_runner_rejects_files_per_group_below_one(fpg):
+    """A group must hold at least one file: 0 and negative values fail at
+    construction instead of validating nothing (or crashing in run())."""
+    with pytest.raises(ValueError, match="files_per_group"):
+        PartitionedValidationRunner(SparkValidator(stream_schema()), files_per_group=fpg)
+
+
+def test_dataframe_groups_share_the_group_loop(spark, tmp_path):
+    """Micro-batch DataFrames go through the same loop as file groups:
+    totals sum to one validate of their union, the callback fires once per
+    batch, the breaker stops early, and no lineage is written or resumed."""
+    schema = "id int, name string, value double"
+    batches = [
+        spark.createDataFrame([(i + 1, f"n{i}", float(i)) for i in range(10)], schema),
+        spark.createDataFrame(
+            [(i + 1, None if i < 3 else f"n{i}", -1.0 if i < 5 else 1.0) for i in range(10)],
+            schema,
+        ),
+        spark.createDataFrame([(0, "z", 2.0), (4, "y", 3.0)], schema),
+    ]
+    union = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    whole = SparkValidator(stream_schema()).validate(union).report
+    want = (
+        whole.n_rows,
+        whole.n_invalid_rows,
+        {c.name: c.n_failed for c in whole.checks if c.n_failed},
+    )
+
+    ckpt = tmp_path / "ckpt"
+    calls = []
+    runner = PartitionedValidationRunner(
+        SparkValidator(stream_schema()),
+        checkpoint_dir=str(ckpt),
+        error_threshold=None,
+        progress_callback=lambda i, n, m: calls.append((i, n)),
+    )
+    for _ in range(2):
+        res = runner.run_dataframe_groups(spark, batches)
+        assert _totals(res.metrics) == want
+        assert res.report.n_rows == whole.n_rows
+        assert [(g.group_id, g.files, g.resumed) for g in res.groups] == [
+            (0, (), False),
+            (1, (), False),
+            (2, (), False),
+        ]
+        assert not list(ckpt.glob("group-*.json"))
+    assert calls == [(1, 3), (2, 3), (3, 3)] * 2
+
+    calls.clear()
+    runner.error_threshold = 0.05
+    res = runner.run_dataframe_groups(spark, batches)
+    assert res.metrics.early_terminated and not res.is_valid
+    assert len(res.groups) == 2 and calls == [(1, 3), (2, 3)]
+    assert res.metrics.total_rows == 20

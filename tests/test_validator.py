@@ -199,25 +199,6 @@ def test_report_exports(spark, dirty):
     assert otel["resource_metrics"]["metrics"][0]["data_points"][0]["value"] == 12
 
 
-def test_unique_hash_prefilter_equivalence(spark, dirty):
-    """hash_prefilter must produce bit-identical verdicts to direct."""
-    direct = make_validator(spark).validate(dirty)
-    pre = SparkValidator(
-        token_schema(),
-        ref_checks={"source": source_dim(spark)},
-        key_columns=("doc_id",),
-        unique_strategy="hash_prefilter",
-    ).validate(dirty)
-    a = {c.name: c.n_failed for c in direct.report.checks}
-    b = {c.name: c.n_failed for c in pre.report.checks}
-    assert a == b
-    assert direct.report.n_invalid_rows == pre.report.n_invalid_rows
-    # violation rows identical as sets of keys
-    ka = {r["doc_id"] for r in direct.violations().select("doc_id").collect()}
-    kb = {r["doc_id"] for r in pre.violations().select("doc_id").collect()}
-    assert ka == kb
-
-
 def test_unique_strategy_validation():
     import pytest as _pytest
 
