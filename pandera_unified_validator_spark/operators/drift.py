@@ -19,7 +19,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .profiler import DataProfiler, ProfileReport
+from .profiler import ProfileReport
 
 __all__ = [
     "DriftReport",
@@ -248,24 +248,12 @@ def histogram_counts(
     df: DataFrame, column: str, edges: Sequence[float]
 ) -> list[int]:
     """Counts per bucket for FIXED shared edges (len(edges)-1 buckets,
-    right-closed last bucket). One groupBy job; values outside the edges clamp
-    into the boundary buckets so both sides always share a support."""
-    lo, hi = float(edges[0]), float(edges[-1])
+    right-closed last bucket): ``histogram_df`` over the outer edges, collected.
+    One groupBy job; values outside the edges clamp into the boundary buckets
+    so both sides always share a support."""
     n_buckets = len(edges) - 1
-    c = F.col(column).cast("double")
-    width = (hi - lo) / n_buckets
-    bucket = F.least(
-        F.greatest(F.floor((c - F.lit(lo)) / F.lit(width)), F.lit(0)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    rows = (
-        df.filter(c.isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
     counts = [0] * n_buckets
-    for r in rows:
+    for r in histogram_df(df, column, edges[0], edges[-1], n_buckets).collect():
         counts[r["bucket"]] = r["n"]
     return counts
 
@@ -425,13 +413,3 @@ def mean_drift_df(
     ).alias("s")
     return a.crossJoin(b).select(pairs).select("s.column", "s.mean_drift")
 
-
-def drift_between(
-    baseline: DataFrame,
-    current: DataFrame,
-    columns: Sequence[str] | None = None,
-    profiler: DataProfiler | None = None,
-) -> DriftReport:
-    """Full D1-D3: profile both sides (2 agg jobs each) + mean-drift compare."""
-    p = profiler or DataProfiler(correlations=False)
-    return compare_profiles(p.profile(baseline, columns), p.profile(current, columns))

@@ -10,8 +10,9 @@ with a single declarative plan:
 3. global checks as their scalable Spark shapes:
    * ``unique`` (C8) → map-side-combined ``groupBy(key).count()`` (the
      duplicate-key set is tiny when data is mostly clean) → **broadcast**
-     left join back to flag member rows — the hash-repartitioned distinct
-     count of the north rule without a sort or window;
+     left join back to flag member rows (shuffled past ``_DUP_KEY_CAP`` dup
+     keys) — the hash-repartitioned distinct count of the north rule
+     without a sort or window;
    * referential (C6 against a dimension DataFrame) → a row-local
      ``col IN (keys)`` flag when the dimension has at most
      ``REF_INLINE_CAP`` distinct keys (read once per validator), otherwise a
@@ -53,12 +54,23 @@ __all__ = [
     "ValidationResult",
     "ValidationFailedError",
     "FLAG_PREFIX",
+    "ROW_OK",
     "REF_INLINE_CAP",
 ]
 
 FLAG_PREFIX = "__chk_"
 _PID = "__puv_pid"
-_ROW_OK = "__puv_row_ok"
+# the per-row AND of every check flag that ``annotate`` adds
+ROW_OK = "__puv_row_ok"
+
+# ``unique`` (C8) joins its dup-key set back onto the rows. An input whose
+# plan-estimated size (file or cached bytes, no job) is at most
+# ``_DUP_KEY_CAP * 8`` B holds no more dup keys than that, so it takes the
+# one-job broadcast plan as is. A larger input counts its dup keys eagerly
+# (persisted, so the join-back reads them from the cache) and broadcasts
+# them only when at most ``_DUP_KEY_CAP`` came back; otherwise the shuffled
+# left join keeps a heavily duplicated input off the driver.
+_DUP_KEY_CAP = 4_000_000
 
 # A referential dimension with at most this many distinct non-NULL keys is
 # checked as the row-local flag ``col IN (keys)``: no join, no broadcast job
@@ -78,6 +90,28 @@ _LOG = logging.getLogger(__name__)
 
 
 from ..plans.stats import plan_size_bytes as _plan_size_bytes  # noqa: E402  (shared with dedup)
+
+
+def _dup_counts(df: DataFrame, col: str) -> DataFrame:
+    """``(col, __dup_n)`` for each non-NULL key seen more than once: a
+    ``unique`` check fails exactly these keys' ``__dup_n`` member rows."""
+    return (
+        df.filter(F.col(col).isNotNull())
+        .groupBy(col)
+        .agg(F.count(F.lit(1)).alias("__dup_n"))
+        .filter(F.col("__dup_n") > 1)
+    )
+
+
+def _unpivot(wide: DataFrame, flag_names: Sequence[str], *keep: str) -> DataFrame:
+    """``wide``'s per-check fail-count columns as ``(check, n_failed)`` rows
+    beside the ``keep`` expressions (a NULL check when there are none)."""
+    if not flag_names:
+        return wide.selectExpr(
+            *keep, "CAST(NULL AS STRING) as check", "CAST(0 AS LONG) as n_failed"
+        )
+    pairs = ", ".join(f"'{n}', `{n}`" for n in flag_names)
+    return wide.selectExpr(*keep, f"stack({len(flag_names)}, {pairs}) as (check, n_failed)")
 
 
 def _inline_comparable(fact: T.DataType, key: T.DataType) -> bool:
@@ -113,19 +147,23 @@ class ValidationResult:
     """Outcome bundle: driver-side report + distributed DataFrames.
 
     ``flags`` is the annotated input (original columns + one boolean flag per
-    check + ``__puv_row_ok``); everything else derives from it lazily so
-    callers pay only for what they use.
+    check + ``ROW_OK``); everything else derives from it lazily so callers
+    pay only for what they use.
     """
 
     report: ValidationReport
     flags: DataFrame
     checks: tuple[str, ...]                   # flag column names (no prefix)
     verdicts: DataFrame                        # per-partition × check counts (long)
-    key_columns: tuple[str, ...] = ()
 
     @property
     def is_valid(self) -> bool:
         return self.report.is_valid
+
+    @property
+    def _internal(self) -> list[str]:
+        """The columns ``annotate`` added to the input."""
+        return [FLAG_PREFIX + c for c in self.checks] + [ROW_OK, _PID]
 
     def violations(self, include_flags: bool = False) -> DataFrame:
         """Invalid rows + ``failed_checks array<string>`` (P5/P6 analogue)."""
@@ -137,19 +175,17 @@ class ValidationResult:
                 ]
             )
         )
-        out = self.flags.filter(~F.col(_ROW_OK)).withColumn("failed_checks", failed_names)
+        out = self.flags.filter(~F.col(ROW_OK)).withColumn("failed_checks", failed_names)
         if not include_flags:
-            out = out.drop(*[FLAG_PREFIX + c for c in self.checks], _ROW_OK, _PID)
+            out = out.drop(*self._internal)
         return out
 
     def valid_rows(self) -> DataFrame:
         """The clean split (reference backends/pandas_backend.py:64-75)."""
-        drop = [FLAG_PREFIX + c for c in self.checks] + [_ROW_OK, _PID]
-        return self.flags.filter(F.col(_ROW_OK)).drop(*drop)
+        return self.flags.filter(F.col(ROW_OK)).drop(*self._internal)
 
     def invalid_rows(self) -> DataFrame:
-        drop = [FLAG_PREFIX + c for c in self.checks] + [_ROW_OK, _PID]
-        return self.flags.filter(~F.col(_ROW_OK)).drop(*drop)
+        return self.flags.filter(~F.col(ROW_OK)).drop(*self._internal)
 
 
 class SparkValidator:
@@ -182,6 +218,11 @@ class SparkValidator:
     partition_by:
         logical partition column for per-partition verdicts; default =
         physical ``spark_partition_id()``.
+
+    A ``unique`` check's join-back shape is picked from the input's
+    plan-estimated size and its exact dup-key count (see ``_DUP_KEY_CAP``)
+    and reported per check in ``report.metadata["unique_join_plan"]``
+    (``"broadcast"`` / ``"shuffle"``).
     """
 
     def __init__(
@@ -194,48 +235,7 @@ class SparkValidator:
         collect_samples: bool = False,
         max_samples: int = 5,
         fail_fast: bool = False,
-        unique_strategy: str = "auto",
-        broadcast_dup_limit: int = 4_000_000,
-        stats_broadcast_bytes: int = 32 << 20,
     ) -> None:
-        """``unique_strategy``:
-
-        * ``"direct"`` — one lazy plan: groupBy the key, keep the keys seen
-          more than once, broadcast that dup-key set back onto the rows. The
-          shuffle carries the full key; the broadcast is unbounded, so a
-          heavily duplicated huge input can exhaust the driver.
-        * ``"auto"`` — the ``"direct"`` plan, guarded in two tiers, both
-          exact-safe:
-
-          1. *Catalyst-stats fast path*: when the input relation's
-             plan-estimated size is ≤ ``stats_broadcast_bytes`` (32 MB —
-             file bytes for parquet, cached bytes for persisted inputs; no
-             job, no scan), even a worst-case every-row-duplicated dup-key
-             set broadcasts comfortably, so the single-job ``"direct"``
-             broadcast plan runs as-is. This keeps small inputs (a
-             partition group, a micro-batch, test scale) at one job with
-             zero fixed overhead.
-          2. otherwise the dup-key set is computed EAGERLY (persist +
-             count): the same column-pruned scan + map-side-combined
-             groupBy the join-back needs anyway runs as its own job, the
-             (tiny, for mostly-clean data) result is cached, and the EXACT
-             dup-key count picks the join-back shape — within
-             ``broadcast_dup_limit`` → broadcast (zero exchange on the big
-             side); otherwise → plain shuffled left join from the cache
-             (AQE may still broadcast at runtime). Heavily-duplicated
-             10^12-row inputs can't OOM the driver, and total input scans
-             equal the ``"direct"`` plan's two; the one extra *job* is
-             fixed overhead that vanishes at scale (round 3 instead ran a
-             separate approx_count_distinct estimate scan before the main
-             pass — +64% on ``check_unique``, −23% token throughput,
-             BENCH_r02→r03).
-
-          **Default** — callers who haven't read this far get the OOM-safe
-          plan; the chosen join shape is surfaced per check in
-          ``report.metadata["unique_join_plan"]``.
-        """
-        if unique_strategy not in ("direct", "auto"):
-            raise ValueError(f"unknown unique_strategy {unique_strategy!r}")
         self.schema = schema
         self.ref_checks = dict(ref_checks or {})
         self.key_columns = tuple(key_columns)
@@ -243,9 +243,6 @@ class SparkValidator:
         self.collect_samples = collect_samples
         self.max_samples = max_samples
         self.fail_fast = fail_fast
-        self.unique_strategy = unique_strategy
-        self.broadcast_dup_limit = int(broadcast_dup_limit)
-        self.stats_broadcast_bytes = int(stats_broadcast_bytes)
         # filled per annotate() call: {check_name: "broadcast" | "shuffle"}
         self.unique_join_plan: dict[str, str] = {}
         # filled per annotate() call: {check_name: "inline" | "broadcast"}
@@ -253,7 +250,7 @@ class SparkValidator:
         # filled per annotate() call: human-readable contract caveats
         # (e.g. unique skipped on a stream) — surfaced in report.warnings
         self.warnings: list[str] = []
-        # dup-key sets cached by the "auto" strategy; released on the next
+        # dup-key sets cached by the eager unique tier; released on the next
         # annotate() (unpersist only drops the cache — recompute is safe)
         self._persisted: list[DataFrame] = []
         # per-validator invariants, resolved on first use: the compiled
@@ -281,17 +278,23 @@ class SparkValidator:
         return hit
 
     def _flag_columns(self, flag_names: tuple[str, ...]) -> tuple[Column, list[Column]]:
-        """(row-ok column, verdict aggregates) for one flag list."""
+        """(row-ok column, ``fail_counts`` aggregates) for one flag list."""
         hit = self._by_flags.get(flag_names)
         if hit is None:
             flags = [F.col(FLAG_PREFIX + n) for n in flag_names]
             row_ok = reduce(lambda a, b: a & b, flags) if flags else F.lit(True)
             aggs = [
                 F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col(_ROW_OK)).cast("long")).alias("n_invalid_rows"),
+                F.sum((~F.col(ROW_OK)).cast("long")).alias("n_invalid_rows"),
             ] + [F.sum((~f).cast("long")).alias(n) for f, n in zip(flags, flag_names)]
             hit = self._by_flags[flag_names] = (row_ok, aggs)
         return hit
+
+    def fail_counts(self, flag_names: Sequence[str]) -> list[Column]:
+        """Aggregates over ``annotate``'s output: ``n_rows``,
+        ``n_invalid_rows`` and, per check, the rows failing it (named after
+        the check)."""
+        return self._flag_columns(tuple(flag_names))[1]
 
     def _dimension(self, col: str) -> tuple[DataFrame, str]:
         dim = self.ref_checks[col]
@@ -375,33 +378,17 @@ class SparkValidator:
                 self.warnings.append(msg)
                 continue
             col = g.column
-            nn = df.filter(F.col(col).isNotNull())
-            dup_keys = (
-                nn.groupBy(col)
-                .agg(F.count(F.lit(1)).alias("__dup_n"))
-                .filter(F.col("__dup_n") > 1)
-                .select(F.col(col).alias("__dup_key"))
-            )
+            dup_keys = _dup_counts(df, col).select(F.col(col).alias("__dup_key"))
             use_broadcast = True
-            if self.unique_strategy == "auto":
-                # tier 1: Catalyst-stats fast path — plan-estimated relation
-                # bytes (file sizes / cached bytes; NO job) small enough
-                # that even an all-duplicates dup-key set broadcasts safely.
-                # Also bounded by broadcast_dup_limit (≥8 B per key) so a
-                # caller-tightened limit still forces the exact tier.
-                size = _plan_size_bytes(df)
-                if size is None or size > min(
-                    self.stats_broadcast_bytes, self.broadcast_dup_limit * 8
-                ):
-                    # tier 2: eager dup-key job — the column-pruned scan +
-                    # map-side-combined groupBy the join-back needs anyway,
-                    # cached, so the EXACT dup-key count picks the join
-                    # shape with no extra input scan (round 3's separate
-                    # approx_count_distinct estimate job was a third scan:
-                    # +64% check_unique wall)
-                    dup_keys = _cache.persist(dup_keys, f"SparkValidator.dup_keys.{g.name}")
-                    self._persisted.append(dup_keys)
-                    use_broadcast = dup_keys.count() <= self.broadcast_dup_limit
+            size = _plan_size_bytes(df)
+            if size is None or size > _DUP_KEY_CAP * 8:
+                # the eager job is the column-pruned scan + map-side-combined
+                # groupBy the join-back needs anyway, so the exact count adds
+                # no input scan (round 3's separate approx_count_distinct
+                # estimate job was a third scan: +64% check_unique wall)
+                dup_keys = _cache.persist(dup_keys, f"SparkValidator.dup_keys.{g.name}")
+                self._persisted.append(dup_keys)
+                use_broadcast = dup_keys.count() <= _DUP_KEY_CAP
             self.unique_join_plan[g.name] = "broadcast" if use_broadcast else "shuffle"
             annotated = annotated.join(
                 F.broadcast(dup_keys) if use_broadcast else dup_keys,
@@ -440,7 +427,7 @@ class SparkValidator:
             names.append(CompiledCheck(name, col, F.col(FLAG_PREFIX + name), "referential"))
 
         row_ok, _aggs = self._flag_columns(tuple(c.name for c in names))
-        annotated = annotated.withColumn(_ROW_OK, row_ok)
+        annotated = annotated.withColumn(ROW_OK, row_ok)
         return annotated, names, compiled.missing
 
     # ------------------------------------------------------------------ #
@@ -459,22 +446,9 @@ class SparkValidator:
 
         pid = F.col(self.partition_by) if self.partition_by else F.col(_PID)
         # ONE aggregation job: per-partition totals + per-check fail counts.
-        _row_ok, aggs = self._flag_columns(tuple(flag_names))
-        wide = annotated.groupBy(pid.alias("partition_id")).agg(*aggs)
+        wide = annotated.groupBy(pid.alias("partition_id")).agg(*self.fail_counts(flag_names))
         # long-format verdict DataFrame for downstream use / persistence
-        if flag_names:
-            stack_expr = ", ".join(f"'{n}', `{n}`" for n in flag_names)
-            verdicts = wide.selectExpr(
-                "partition_id",
-                "n_rows",
-                "n_invalid_rows",
-                f"stack({len(flag_names)}, {stack_expr}) as (check, n_failed)",
-            )
-        else:
-            verdicts = wide.selectExpr(
-                "partition_id", "n_rows", "n_invalid_rows",
-                "CAST(NULL AS STRING) as check", "CAST(0 AS LONG) as n_failed",
-            )
+        verdicts = _unpivot(wide, flag_names, "partition_id", "n_rows", "n_invalid_rows")
 
         rows = wide.collect()
         n_rows = sum(r["n_rows"] for r in rows)
@@ -561,7 +535,6 @@ class SparkValidator:
             flags=annotated,
             checks=tuple(flag_names),
             verdicts=verdicts,
-            key_columns=self.key_columns,
         )
         if self.fail_fast and not report.is_valid:
             raise ValidationFailedError(report)
@@ -597,31 +570,17 @@ class SparkValidator:
             )
         parts: list[DataFrame] = []
         if flag_names:
-            aggs = [F.count(F.lit(1)).alias("__n")] + [
-                F.sum((~F.col(FLAG_PREFIX + n)).cast("long")).alias(n)
-                for n in flag_names
-            ]
-            wide = annotated.agg(*aggs)
-            stack_expr = ", ".join(f"'{n}', `{n}`" for n in flag_names)
+            wide = annotated.agg(*self.fail_counts(flag_names))
             parts.append(
-                wide.selectExpr(
-                    f"stack({len(flag_names)}, {stack_expr}) as (check, n_failed)",
-                    "__n as n_checked",
-                ).select("check", "n_failed", "n_checked")
+                _unpivot(wide, flag_names, "n_rows as n_checked").select(
+                    "check", "n_failed", "n_checked"
+                )
             )
         if uniq:
             total = df.agg(F.count(F.lit(1)).alias("n_checked"))
             for g in uniq:
-                dup_sum = (
-                    df.filter(F.col(g.column).isNotNull())
-                    .groupBy(g.column)
-                    .agg(F.count(F.lit(1)).alias("__c"))
-                    .filter(F.col("__c") > 1)
-                    .agg(
-                        F.coalesce(F.sum("__c"), F.lit(0))
-                        .cast("long")
-                        .alias("n_failed")
-                    )
+                dup_sum = _dup_counts(df, g.column).agg(
+                    F.coalesce(F.sum("__dup_n"), F.lit(0)).cast("long").alias("n_failed")
                 )
                 parts.append(
                     dup_sum.crossJoin(total).select(

@@ -58,7 +58,11 @@ class GroupResult:
 
 @dataclass
 class StreamingResult:
-    """Reference ``StreamingResult`` analogue (core/streaming.py:430-436)."""
+    """Reference ``StreamingResult`` analogue (core/streaming.py:430-436).
+
+    ``metrics`` and ``groups`` cover every group, resumed or not; ``report``
+    merges only the groups validated in this call (None when all resumed).
+    """
 
     metrics: ValidationMetrics
     groups: list[GroupResult] = field(default_factory=list)

@@ -15,7 +15,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.validator import FLAG_PREFIX, SparkValidator
+from ..operators.validator import ROW_OK, SparkValidator
 from ..utils.reporting import ValidationMetrics
 
 __all__ = [
@@ -86,18 +86,12 @@ def windowed_error_rates(
     <one fail-count column per check>). Caller attaches a sink.
     """
     annotated, checks, _ = validator.annotate(stream_df)
-    flag_names = [c.name for c in checks]
     win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((~F.col("__puv_row_ok")).cast("long")).alias("n_invalid"),
-    ] + [
-        F.sum((~F.col(FLAG_PREFIX + n)).cast("long")).alias(n) for n in flag_names
-    ]
     return (
         annotated.withWatermark(ts_col, watermark)
         .groupBy(win.alias("window"))
-        .agg(*aggs)
+        .agg(*validator.fail_counts([c.name for c in checks]))
+        .withColumnRenamed("n_invalid_rows", "n_invalid")
         .withColumn("error_rate", F.col("n_invalid") / F.col("n_rows"))
     )
 
@@ -129,7 +123,7 @@ def stateful_error_monitor(
     annotated, _checks, _ = validator.annotate(stream_df)
     sel = annotated.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col("__puv_row_ok").alias("__ok"),
+        F.col(ROW_OK).alias("__ok"),
     )
     out_schema = (
         "key string, batch_rows long, batch_invalid long, total_rows long, "

@@ -1,6 +1,9 @@
 """CLI surface tests."""
 
+import importlib.util
 import json
+import os
+import shutil
 import subprocess
 import sys
 
@@ -112,3 +115,30 @@ def test_cli_text_corpus_dedup(spark, tmp_path):
     assert r.returncode == 0, r.stderr[-2000:]
     kept = spark.read.parquet(out)
     assert kept.count() == 2  # the two identical files collapse to one
+
+
+def test_submit_job_writes_violations_on_resumed_run(spark, tmp_path, monkeypatch):
+    """A second ``submit_job`` run over the same checkpoint resumes every
+    group, so it validates nothing and has no merged report; it must still
+    write the violation rows of the invalid table."""
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "submit_job.py")
+    spec = importlib.util.spec_from_file_location("submit_job", path)
+    submit_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit_job)
+    inp, viol, report = (str(tmp_path / n) for n in ("tokens", "violations", "report.json"))
+
+    def run(*extra):
+        monkeypatch.setattr(sys, "argv", [
+            "submit_job.py", "--input", inp, "--checkpoint", str(tmp_path / "ckpt"),
+            "--violations", viol, "--report", report, *extra,
+        ])
+        assert submit_job.main() == 1  # the dirty table is invalid
+        with open(report) as f:
+            groups = json.load(f)["groups"]
+        return [g["resumed"] for g in groups], spark.read.parquet(viol).count()
+
+    cold, n_cold = run("--synthesize", "2000")
+    assert not any(cold) and n_cold > 0
+    shutil.rmtree(viol)
+    resumed, n_resumed = run()
+    assert all(resumed) and n_resumed == n_cold

@@ -121,6 +121,17 @@ def test_numeric_drift_psi(spark):
     assert rep2.drifted and rep2.psi["n_tok"] > 0.2
 
 
+def test_numeric_drift_survives_subnormal_span(spark):
+    """A baseline spanning [0.0, 5e-324] has min < max, but its bucket width
+    underflows to 0.0, so every shared edge is 0.0. The histograms must take
+    ``histogram_df``'s width guard instead of dividing by zero (ANSI mode
+    turns that into DIVIDE_BY_ZERO)."""
+    df = spark.createDataFrame([(0.0,), (5e-324,), (5e-324,)], "x double")
+    rep = numeric_drift(df, df, "x")
+    assert rep.psi["x"] == pytest.approx(0.0, abs=1e-9)
+    assert not rep.drifted
+
+
 def test_token_frequency_drift(spark):
     a = token_table(spark, 500, seed=42)
     b = token_table(spark, 500, seed=42)

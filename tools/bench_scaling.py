@@ -87,7 +87,6 @@ def _measure(spark, n_rows: int) -> dict:
         token_schema(),
         ref_checks={"source": source_dim(spark)},
         key_columns=("doc_id",),
-        unique_strategy=os.environ.get("PUV_SCALE_UNIQUE", "direct"),
     )
     for _ in range(WARMUPS):
         validator.validate(df)

@@ -80,7 +80,7 @@ def main() -> int:
     )
     result = runner.run(spark, args.input)
 
-    if args.violations and result.report is not None and not result.is_valid:
+    if args.violations and not result.is_valid:
         res = validator.validate(spark.read.parquet(args.input))
         from pyspark.sql import functions as F
 
