@@ -63,11 +63,7 @@ def cmd_validate(args) -> int:
             res.report.to_json(args.output)
         print(f"report written to {args.output}")
     if args.violations and not res.is_valid:
-        from pyspark.sql import functions as F
-
-        res.violations().withColumn(
-            "failed_checks", F.concat_ws(",", F.array_sort("failed_checks"))
-        ).write.mode("overwrite").parquet(args.violations)
+        res.flat_violations().write.mode("overwrite").parquet(args.violations)
         print(f"violation rows written to {args.violations}")
     return 0 if res.is_valid else 1
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_pandas_udf, hyperplane_signature_udf
 
-__all__ = ["brute_force_topk", "lsh_topk", "IvfIndex"]
+__all__ = ["brute_force_topk", "lsh_topk"]
 
 
 def brute_force_topk(
@@ -88,81 +88,3 @@ def lsh_topk(
     candidates = tagged.filter(F.col("__bucket").isin(list(probes)))
     return brute_force_topk(candidates, query, k, id_col, vec_col)
 
-
-class IvfIndex:
-    """IVF-flat index: k-means-lite centroids (seeded sample, Lloyd rounds on
-    a sample, numpy driver-side), corpus assigned to nearest centroid once
-    (one Arrow-UDF pass — in production written ``partitionBy(centroid)``),
-    queries probe ``n_probe`` nearest lists and exact-rerank.
-    """
-
-    def __init__(
-        self,
-        corpus: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        *,
-        n_lists: int = 16,
-        sample_rows: int = 2048,
-        iters: int = 5,
-        seed: int = 42,
-    ) -> None:
-        import numpy as np
-
-        self.id_col, self.vec_col = id_col, vec_col
-        # seeded Bernoulli sample spanning the whole corpus (a bare
-        # .limit(sample_rows) is first-N: on sorted/clustered input the
-        # centroids would all come from one region). One cheap count job
-        # sizes the fraction; .sample is a per-row filter, no shuffle.
-        n_corpus = corpus.count()
-        frac = min(1.0, (3.0 * sample_rows) / max(n_corpus, 1))
-        sample = np.vstack(
-            [
-                r[vec_col]
-                for r in corpus.select(vec_col)
-                .sample(fraction=frac, seed=seed)
-                .limit(int(sample_rows))
-                .collect()
-            ]
-        ).astype("float32")
-        rng = np.random.RandomState(seed)
-        cent = sample[rng.choice(len(sample), size=min(n_lists, len(sample)), replace=False)]
-        for _ in range(iters):  # Lloyd on the sample (driver-side, tiny)
-            d = ((sample[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-            assign = d.argmin(1)
-            for c in range(len(cent)):
-                m = sample[assign == c]
-                if len(m):
-                    cent[c] = m.mean(0)
-        self.centroids = cent
-
-        planes = cent  # assignment = argmax dot with centroids (normalized)
-        norm = np.linalg.norm(planes, axis=1, keepdims=True)
-        norm[norm == 0] = 1
-        self._assign_mat = (planes / norm).T.astype("float32")
-
-        from pyspark.sql import types as T
-
-        mat = self._assign_mat
-
-        @F.pandas_udf(T.IntegerType())
-        def assign_udf(col):
-            import numpy as _np
-            import pandas as _pd
-
-            m = _np.vstack(col.to_numpy())
-            n = _np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = 1
-            return _pd.Series((m / n @ mat).argmax(1).astype("int32"))
-
-        self.assigned = corpus.withColumn("__list", assign_udf(F.col(vec_col)))
-
-    def search(self, query: Sequence[float], k: int = 10, n_probe: int = 3) -> DataFrame:
-        import numpy as np
-
-        q = np.asarray(query, dtype="float32")
-        qn = np.linalg.norm(q) or 1.0
-        scores = (q / qn) @ self._assign_mat
-        probe = [int(i) for i in np.argsort(-scores)[:n_probe]]
-        cand = self.assigned.filter(F.col("__list").isin(probe))
-        return brute_force_topk(cand, list(query), k, self.id_col, self.vec_col)

@@ -180,6 +180,14 @@ class ValidationResult:
             out = out.drop(*self._internal)
         return out
 
+    def flat_violations(self) -> DataFrame:
+        """``violations()`` with ``failed_checks`` as one string of the
+        sorted labels joined by commas: the on-disk (Parquet) format every
+        violation writer uses."""
+        return self.violations().withColumn(
+            "failed_checks", F.concat_ws(",", F.array_sort("failed_checks"))
+        )
+
     def valid_rows(self) -> DataFrame:
         """The clean split (reference backends/pandas_backend.py:64-75)."""
         return self.flags.filter(F.col(ROW_OK)).drop(*self._internal)

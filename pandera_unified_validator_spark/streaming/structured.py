@@ -58,8 +58,7 @@ class StreamingValidationSink:
         )
         if self.violations_path and res.report.n_invalid_rows:
             (
-                res.violations()
-                .withColumn("failed_checks", F.concat_ws(",", F.array_sort("failed_checks")))
+                res.flat_violations()
                 .withColumn("batch_id", F.lit(batch_id))
                 .write.mode("append")
                 .parquet(self.violations_path)

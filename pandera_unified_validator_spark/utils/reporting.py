@@ -15,7 +15,7 @@ from __future__ import annotations
 import json
 import time
 from collections import Counter
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Mapping, Sequence
 
 __all__ = [
@@ -66,14 +66,24 @@ class ValidationReport:
     n_rows: int = 0
     n_invalid_rows: int = 0
 
-    # -- merge (reference utils/reporting.py:58-65: AND validity, concat) ---
+    # -- merge (reference utils/reporting.py:58-65: AND validity, sum) ------
     def merge(self, other: "ValidationReport") -> "ValidationReport":
         """Combine reports over DISJOINT inputs (per-group/per-chunk runs):
         row totals and invalid totals both sum, keeping the implied error
-        rate consistent."""
+        rate consistent. A check present in both reports is listed once,
+        with its failed and checked counts summed and samples concatenated."""
+        checks = {c.name: c for c in self.checks}
+        for c in other.checks:
+            prev = checks.get(c.name)
+            checks[c.name] = c if prev is None else replace(
+                prev,
+                n_failed=prev.n_failed + c.n_failed,
+                n_checked=prev.n_checked + c.n_checked,
+                samples=prev.samples + c.samples,
+            )
         return ValidationReport(
             is_valid=self.is_valid and other.is_valid,
-            checks=self.checks + other.checks,
+            checks=tuple(checks.values()),
             errors=self.errors + other.errors,
             warnings=self.warnings + other.warnings,
             metadata={**self.metadata, **other.metadata},

@@ -7,6 +7,7 @@ import shutil
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,24 +42,31 @@ def test_cli_schema_then_validate(users_csv, tmp_path):
     cols = {c["name"] for c in schema["columns"]}
     assert {"id", "email", "age"} <= cols
 
-    # tighten: age ≤ 120, email pattern → row 2 and 3 must fail
+    # tighten: id ≤ 2, age ≤ 120, email pattern → row 2 and 3 must fail
     schema["columns"] = [
-        {"name": "id", "dtype": "int", "nullable": False, "unique": True},
+        {"name": "id", "dtype": "int", "nullable": False, "unique": True, "le": 2},
         {"name": "email", "dtype": "str", "pattern": r"^[^@\s]+@[^@\s]+\.[a-z]+$"},
         {"name": "age", "dtype": "int", "ge": 0, "le": 120},
     ]
     with open(schema_path, "w") as f:
         json.dump(schema, f)
     report_path = str(tmp_path / "report.json")
+    viol_path = str(tmp_path / "violations")
     r2 = run_cli(
         "validate", users_csv, "--schema", schema_path, "--format", "csv",
-        "--key", "id", "--output", report_path,
+        "--key", "id", "--output", report_path, "--violations", viol_path,
     )
     assert r2.returncode == 1  # invalid data → nonzero exit
     rep = json.load(open(report_path))
     by = {c["name"]: c["n_failed"] for c in rep["checks"]}
-    assert by["email__pattern"] == 1 and by["age__le"] == 1
+    assert by["email__pattern"] == 1 and by["age__le"] == 1 and by["id__le"] == 1
     assert rep["summary"]["n_invalid_rows"] == 2
+    # violation rows on disk carry the failed labels sorted, comma-joined
+    rows = pq.read_table(viol_path).to_pylist()
+    assert {r["id"]: r["failed_checks"] for r in rows} == {
+        2: "email__pattern",
+        3: "age__le,id__le",
+    }
 
 
 def test_cli_profile(users_csv, tmp_path):

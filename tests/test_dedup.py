@@ -1,5 +1,5 @@
 """Dedup + similarity operator tests: exact, MinHash LSH, SimHash, n-gram
-Jaccard, embedding near-dup, brute-force/LSH/IVF top-k."""
+Jaccard, embedding near-dup, brute-force/LSH top-k."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +16,6 @@ from pandera_unified_validator_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from pandera_unified_validator_spark.operators.similarity import (
-    IvfIndex,
     brute_force_topk,
     lsh_topk,
 )
@@ -189,13 +188,6 @@ def test_embedding_dim_inference_skips_leading_nulls(spark, embeddings):
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     assert {(0, 10000), (1, 10001), (2, 10002)} <= found
     assert not any(99999 in p for p in found)
-
-
-def test_ivf_index(spark, embeddings):
-    idx = IvfIndex(embeddings, n_lists=8, sample_rows=256)
-    q = embeddings.filter("vec_id = 7").collect()[0]["embedding"]
-    got = idx.search(q, k=3, n_probe=3).collect()
-    assert got[0]["vec_id"] == 7 and got[0]["cosine_sim"] == pytest.approx(1.0)
 
 
 def test_embedding_near_dup(spark, embeddings):

@@ -473,6 +473,8 @@ def test_runner_groups_match_whole_table_and_skip_inference(spark, tmp_path):
         res = out[0]
         assert len(res.groups) == -(-4 // fpg)
         assert _totals(res.metrics) == want, fpg
+        merged = {c.name: c.n_failed for c in res.report.checks if c.n_failed}
+        assert merged == dict(res.metrics.common_errors), fpg
 
 
 def test_runner_partitioned_layout_reads_partition_columns(spark, tmp_path):

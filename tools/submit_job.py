@@ -82,11 +82,7 @@ def main() -> int:
 
     if args.violations and not result.is_valid:
         res = validator.validate(spark.read.parquet(args.input))
-        from pyspark.sql import functions as F
-
-        res.violations().withColumn(
-            "failed_checks", F.concat_ws(",", F.array_sort("failed_checks"))
-        ).write.mode("overwrite").parquet(args.violations)
+        res.flat_violations().write.mode("overwrite").parquet(args.violations)
 
     payload = {
         "is_valid": result.is_valid,
