@@ -35,6 +35,13 @@ Scale notes (100 TB):
   pairs; the join back is a long=long shuffle join (the dup-gram set is
   unbounded, so it is NOT broadcast); the per-doc coverage window and
   the final per-doc sum share one hash partitioning on ``doc_id``.
+* ``remove_duplicated_spans`` is not persisted: its gram table crosses
+  one exchange on the gram hash (no token arrays), and one window over
+  each gram's occurrences, sorted by ``(id, pos)``, yields both the
+  canonical keeper and the gram's doc count. The window buffers a
+  gram's occurrence group, which spills, not fails, for a hot
+  boilerplate gram. Only the hits move on, to the ``id``-keyed segment
+  window; token arrays cross only the rebuild join.
 * ``pack_sequences`` shuffles only ``(doc_id, n_tok, order)`` triples —
   never the token arrays — into ``shards`` independent groups; each
   shard packs locally in one Arrow batch. Bin ids are per-shard, so no
@@ -195,6 +202,8 @@ def duplicated_ngram_coverage(
     then scans only ``(id, n_tok)`` instead of re-reading the token
     arrays to size them.
     """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     length = (
         F.coalesce(F.col(n_tok_col).cast("int"), F.lit(0))
         if n_tok_col is not None
@@ -291,54 +300,53 @@ def remove_duplicated_spans(
     length. Documents with nothing to remove (including NULL-token
     docs) pass through unchanged.
 
-    Shape at scale: the gram explode/dup-gram aggregate is shared
-    machinery with the coverage operator (hash-combined grams, never
-    materialized strings); the running-max window converts overlapping
-    hit intervals into disjoint segments, so the per-doc segment list is
-    bounded by ``len/1`` worst-case but tiny in practice; the ONE
-    shuffle of token arrays is the final ``id``-keyed join that pairs
-    each doc with its segment list for the rebuild (rewriting content
-    requires touching it exactly once). The rebuild itself is a per-row
-    fold over the segment list (interpreted HOF — acceptable: it runs
-    once per *rewritten* document, not per token)."""
-    grams = _cache.persist(
-        df.select(
-            F.col(id_col),
-            F.coalesce(F.size(F.col(tokens_col)), F.lit(0)).alias("__len"),
-            F.posexplode(_gram_hashes(F.col(tokens_col), n)).alias("__pos", "__g"),
-        ),
-        "remove_duplicated_spans.grams",
+    Shape at scale: the gram explode is shared machinery with the
+    coverage operator (hash-combined grams, never materialized strings);
+    the gram table crosses ONE exchange, keyed on the gram hash, where a
+    window over each gram's occurrences picks the canonical one and
+    counts the gram's documents; the running-max window converts
+    overlapping hit intervals into disjoint segments, so the per-doc
+    segment list is bounded by ``len/1`` worst-case but tiny in
+    practice; the ONE shuffle of token arrays is the final ``id``-keyed
+    join that pairs each doc with its segment list for the rebuild
+    (rewriting content requires touching it exactly once). The rebuild
+    itself is a per-row fold over the segment list (interpreted HOF —
+    acceptable: it runs once per *rewritten* document, not per token).
+
+    A NULL ``id`` counts as one document toward ``min_docs`` (all NULL-id
+    rows together, as ``groupBy`` keys them), never holds a canonical
+    occurrence, and its documents pass through unchanged."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    grams = df.select(
+        F.col(id_col),
+        F.coalesce(F.size(F.col(tokens_col)), F.lit(0)).alias("__len"),
+        F.posexplode(_gram_hashes(F.col(tokens_col), n)).alias("__pos", "__g"),
     )
-    # two-level aggregate: (gram, doc) → first in-doc position is a pure
-    # HASH aggregate (map-side combined, codegen); the canonical pick over
-    # the already-distinct (gram, doc) rows is lexicographic min of
-    # (id, first_pos) — expressed as min(id) + min_by(first_pos, id)
-    # (id is UNIQUE within a gram group, so min_by is exact), both
-    # fixed-width DECLARATIVE aggregates that stay in HashAggregate.
-    # Round 6 aggregated min(struct(id, pos)), whose struct buffer forced a
-    # SortAggregate — two full sorts of the corpus-sized gram table
-    # (measured: the dup-pick stage dominated the operator at sf1.0).
-    per_doc = grams.groupBy("__g", id_col).agg(F.min("__pos").alias("__fp"))
-    dup = (
-        per_doc.groupBy("__g")
-        .agg(
-            F.count(F.lit(1)).alias("__nd"),
-            F.min(F.col(id_col)).alias("__ci"),
-            F.min_by(F.col("__fp"), F.col(id_col)).alias("__cp"),
-        )
-        .filter(F.col("__nd") >= min_docs)
-        .select(
-            "__g",
-            F.struct(
-                F.col("__ci").alias("i"), F.col("__cp").alias("p")
-            ).alias("__can"),
-        )
+    # one exchange on the gram: each gram's occurrences sorted by
+    # (id, pos) — the first row is the canonical keeper, a change of id
+    # starts a new document, and the per-gram doc count is the sum of
+    # those starts, so the gram table is read once and never cached
+    occ = Window.partitionBy("__g").orderBy(
+        F.col(id_col).asc_nulls_last(), F.col("__pos")
     )
-    hits = grams.join(dup, "__g").filter(
-        ~(
-            (F.col(id_col) == F.col("__can.i"))
-            & (F.col("__pos") == F.col("__can.p"))
-        )
+    ranked = grams.select(
+        "*",
+        F.row_number().over(occ).alias("__rn"),
+        F.lag(id_col).over(occ).eqNullSafe(F.col(id_col)).alias("__same"),
+        F.lag("__pos").over(occ).alias("__pp"),
+    )
+    new_doc = (F.col("__rn") == 1) | ~F.col("__same")
+    # a row repeating the (id, pos) before it comes from a duplicated
+    # doc_id: it shares that row's fate, so the canonical (id, pos) stays
+    tie = F.col("__same") & (F.col("__pp") == F.col("__pos"))
+    hits = ranked.withColumn(
+        "__nd", F.sum(new_doc.cast("int")).over(Window.partitionBy("__g"))
+    ).filter(
+        (F.col("__nd") >= min_docs)
+        & (F.col("__rn") > 1)
+        & ~tie
+        & F.col(id_col).isNotNull()
     )
     end = F.least(F.col("__pos") + n, F.col("__len"))
     w = (
@@ -442,6 +450,8 @@ def pack_sequences(
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
+    if shards < 1:
+        raise ValueError(f"shards must be >= 1, got {shards}")
     ordc = order_col or id_col
     slim = df.filter(F.col(n_tok_col).isNotNull()).select(
         F.col(id_col).alias("__id"),
@@ -592,6 +602,8 @@ def materialize_packed_bins(
                 "copartition=True needs the pack_sequences shard count "
                 "(pass shards=<same value>, and seed if non-default)"
             )
+        if shards < 1:
+            raise ValueError(f"shards must be >= 1, got {shards}")
         shard_of = (
             F.pmod(sample_hash(F.col(id_col), seed), F.lit(shards))
             .cast("int")

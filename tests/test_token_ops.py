@@ -11,9 +11,11 @@ from pandera_unified_validator_spark.operators.token_ops import (
     materialize_packed_bins,
     mixture_rates,
     pack_sequences,
+    remove_duplicated_spans,
     token_budget_sample,
     token_sequence_flags,
 )
+from pandera_unified_validator_spark.utils.cache import registry
 
 
 # ------------------------------------------------------------- flags ---
@@ -470,7 +472,9 @@ def test_token_budget_sample(spark):
 def _removal_oracle(docs, n, min_docs):
     """Pure-Python replay of remove_duplicated_spans: dup grams with a
     first-(doc,pos) canonical keeper; a position is removed iff covered
-    by any NON-canonical dup-gram occurrence."""
+    by any NON-canonical dup-gram occurrence. All NULL-id docs together
+    count as one doc toward ``min_docs``, never hold the canonical
+    occurrence, and pass through unchanged."""
     from collections import defaultdict
 
     def occurrences(toks):
@@ -486,28 +490,27 @@ def _removal_oracle(docs, n, min_docs):
         for pos, g in occurrences(toks or []):
             gram_docs[g].add(doc_id)
             key = (doc_id, pos)
-            if g not in gram_can or key < gram_can[g]:
+            if doc_id is not None and (g not in gram_can or key < gram_can[g]):
                 gram_can[g] = key
-    out = {}
+    out = []
     for doc_id, toks in docs:
         toks = toks or []
         removed = set()
-        for pos, g in occurrences(toks):
+        for pos, g in occurrences(toks) if doc_id is not None else ():
             if len(gram_docs[g]) >= min_docs and gram_can[g] != (doc_id, pos):
                 removed |= set(range(pos, min(pos + n, len(toks))))
-        out[doc_id] = (
-            [t for i, t in enumerate(toks) if i not in removed],
-            len(toks),
-            len(removed),
+        out.append(
+            (
+                doc_id,
+                [t for i, t in enumerate(toks) if i not in removed],
+                len(toks),
+                len(removed),
+            )
         )
     return out
 
 
 def test_remove_duplicated_spans(spark):
-    from pandera_unified_validator_spark.operators.token_ops import (
-        remove_duplicated_spans,
-    )
-
     boiler = [9, 8, 7, 6, 5, 4]
     docs = [
         (1, [1, 2, 3] + boiler + [10, 11]),   # canonical boiler keeper
@@ -526,8 +529,8 @@ def test_remove_duplicated_spans(spark):
         for r in remove_duplicated_spans(df, n=4, min_docs=2).collect()
     }
     expected = _removal_oracle(docs, 4, 2)
-    assert set(got) == set(expected)
-    for doc_id, (clean, tok_len, n_removed) in expected.items():
+    assert set(got) == {e[0] for e in expected}
+    for doc_id, clean, tok_len, n_removed in expected:
         r = got[doc_id]
         if docs[doc_id - 1][1] is None:
             assert r["tokens"] is None
@@ -541,29 +544,92 @@ def test_remove_duplicated_spans(spark):
     assert got[7]["tokens"] == [] and got[6]["tokens"] == [60, 61]
 
 
+def _removal_rows(df, n, min_docs):
+    return sorted(
+        (
+            (r["doc_id"], list(r["tokens"] or []), r["tok_len"], r["n_removed"])
+            for r in remove_duplicated_spans(df, n=n, min_docs=min_docs).collect()
+        ),
+        key=repr,
+    )
+
+
 @given(
     token_lists=st.lists(
-        st.lists(st.integers(min_value=0, max_value=3), max_size=10),
+        st.tuples(
+            st.booleans(),
+            st.lists(st.integers(min_value=0, max_value=3), max_size=10),
+        ),
         min_size=1,
         max_size=8,
     )
 )
 @settings(max_examples=12, deadline=None)
 def test_remove_duplicated_spans_property(spark, token_lists):
-    """Tiny-alphabet corpora force heavy gram sharing; the engine must
-    match the positional-set oracle exactly, and cleaned length must
-    equal tok_len - n_removed."""
-    from pandera_unified_validator_spark.operators.token_ops import (
-        remove_duplicated_spans,
-    )
-
-    docs = [(i, toks) for i, toks in enumerate(token_lists)]
+    """Tiny-alphabet corpora force heavy gram sharing; for min_docs 2 and
+    3 the engine must match the positional-set oracle exactly (NULL ids
+    included), and cleaned length must equal tok_len - n_removed."""
+    docs = [(None if null else i, toks) for i, (null, toks) in enumerate(token_lists)]
     df = spark.createDataFrame(docs, "doc_id int, tokens array<int>")
-    got = {
-        r["doc_id"]: r for r in remove_duplicated_spans(df, n=3, min_docs=2).collect()
-    }
-    expected = _removal_oracle(docs, 3, 2)
-    for doc_id, (clean, tok_len, n_removed) in expected.items():
-        r = got[doc_id]
-        assert list(r["tokens"] or []) == clean, doc_id
-        assert r["n_removed"] == n_removed == tok_len - len(clean), doc_id
+    for min_docs in (2, 3):
+        got = _removal_rows(df, 3, min_docs)
+        assert got == sorted(_removal_oracle(docs, 3, min_docs), key=repr), min_docs
+        for _, clean, tok_len, n_removed in got:
+            assert n_removed == tok_len - len(clean)
+
+
+@pytest.mark.parametrize("parts", [1, 7])
+def test_remove_duplicated_spans_edges(spark, parts):
+    """Pinned outputs (n=3, min_docs=2) on 1 and 7 input partitions: a
+    NULL-id doc counts toward min_docs but passes through unchanged; two
+    docs sharing the canonical doc_id both keep the canonical
+    occurrence; a gram present in every doc keeps only its first."""
+    cases = [
+        ([("a", [1, 2, 3, 4, 1, 2, 3, 4]), (None, [1, 2, 3, 4])],
+         [(None, [1, 2, 3, 4], 4, 0), ("a", [1, 2, 3, 4], 8, 4)]),
+        ([("b", [7, 7, 7, 7]), (None, [7, 7, 7, 7, 7])],
+         [(None, [7, 7, 7, 7, 7], 5, 0), ("b", [7], 4, 3)]),
+        ([("x", [1, 2, 3, 9]), ("x", [1, 2, 3, 8]), ("y", [1, 2, 3])],
+         [("x", [1, 2, 3, 8], 4, 0), ("x", [1, 2, 3, 9], 4, 0), ("y", [], 3, 3)]),
+        ([(f"d{i:03d}", [1, 2, 3, 4, 5, 6]) for i in range(200)],
+         [("d000", [1, 2, 3, 4, 5, 6], 6, 0)]
+         + [(f"d{i:03d}", [], 6, 6) for i in range(1, 200)]),
+    ]
+    for docs, want in cases:
+        df = spark.createDataFrame(docs, "doc_id string, tokens array<int>")
+        got = _removal_rows(df.repartition(parts), 3, 2)
+        assert got == sorted(want, key=repr)
+        assert got == sorted(_removal_oracle(docs, 3, 2), key=repr)
+
+
+def test_remove_duplicated_spans_plan(spark, tmp_path):
+    """The gram table crosses one exchange, keyed on the gram hash, and
+    is neither cached nor registered with the operator-cache registry."""
+    docs = [(f"d{i}", [i % 5, 9, 8, 7, 6, 5, i]) for i in range(40)]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(docs, "doc_id string, tokens array<int>").write.parquet(path)
+    before = registry.labels()
+    out = remove_duplicated_spans(spark.read.parquet(path), n=4)
+    rows = out.collect()
+    assert registry.labels() == before
+    assert sum(r["n_removed"] for r in rows) > 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning(__g") == 1, final
+
+
+def test_token_ops_reject_bad_sizes(spark):
+    df = spark.createDataFrame(
+        [("a", [1, 2], 2)], "doc_id string, tokens array<int>, n_tok int"
+    )
+    for shards in (0, -2):
+        with pytest.raises(ValueError, match="shards"):
+            pack_sequences(df, capacity=8, shards=shards)
+        with pytest.raises(ValueError, match="shards"):
+            materialize_packed_bins(
+                df, df, capacity=8, pad_id=0, copartition=True, shards=shards
+            )
+    for op in (remove_duplicated_spans, duplicated_ngram_coverage):
+        with pytest.raises(ValueError, match="n must"):
+            op(df, n=0)

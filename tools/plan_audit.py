@@ -220,21 +220,21 @@ def main() -> None:
         remove_duplicated_spans,
     )
 
-    # scoped like the DSIR section above: the operator persists its gram
-    # table through the registry, and the scope releases it once the plan
-    # string is captured
-    with _dsir_scope():
-        sections.append(
-            (
-                "Duplicated-span removal (ExactSubstr edit step, round-6)",
-                "The gram explode and dup-gram aggregate shuffle only "
-                "(id, pos, gram-hash) longs; the running-max window converts "
-                "hit intervals to disjoint segments; token ARRAYS cross "
-                "exactly one shuffle — the final id-keyed join that pairs "
-                "each doc with its segment list for the rebuild fold.",
-                plan_of(remove_duplicated_spans(df, n=8, min_docs=2)),
-            )
+    sections.append(
+        (
+            "Duplicated-span removal (ExactSubstr edit step, round-6)",
+            "The gram table — (id string, length int, pos int, gram-hash "
+            "long) rows, no token arrays, not persisted — crosses ONE "
+            "exchange, on the gram hash; one window over each gram's "
+            "occurrences sorted by (id, pos) picks the canonical keeper "
+            "and counts the gram's docs (no aggregate, no join back). Only "
+            "the hits cross the id exchange of the running-max window that "
+            "converts hit intervals to disjoint segments; token ARRAYS "
+            "cross exactly one shuffle — the final id-keyed join that "
+            "pairs each doc with its segment list for the rebuild fold.",
+            plan_of(remove_duplicated_spans(df, n=8, min_docs=2)),
         )
+    )
 
     from pandera_unified_validator_spark.operators.pipeline import (
         CurationConfig,
