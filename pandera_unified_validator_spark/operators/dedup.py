@@ -797,7 +797,6 @@ def contamination_flags(
     bench_text_col: str | None = None,
     n: int = 8,
     min_overlap: int = 1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing ≥
     ``min_overlap`` distinct word ``n``-grams with ANY benchmark document —
@@ -809,8 +808,7 @@ def contamination_flags(
     corpus side is one explode → hash-join → per-doc count, so the corpus
     is scanned once and never shuffled on text — only (doc_id, count) pairs
     reach the aggregation, and grams are ``shingle_hashes`` longs (no gram
-    strings anywhere). Set ``broadcast_benchmark=False`` for an oversized
-    benchmark (the join falls back to shuffle; AQE may still broadcast).
+    strings anywhere).
 
     Returns (id, overlap_grams) for flagged docs only — at 10^12 docs the
     clean majority must not be materialized. ``overlap_grams`` counts the
@@ -826,8 +824,6 @@ def contamination_flags(
         .select(F.explode(_gram_hashes(F.col("__whh"), n)).alias("__g"))
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = df.select(
         F.col(id_col),
         F.transform(words(text_col), lambda w: F.xxhash64(w)).alias("__whh"),
@@ -835,12 +831,7 @@ def contamination_flags(
         F.col(id_col),
         F.explode(F.array_distinct(_gram_hashes(F.col("__whh"), n))).alias("__g"),
     )
-    return (
-        doc_grams.join(bench_grams, "__g")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("overlap_grams"))
-        .filter(F.col("overlap_grams") >= min_overlap)
-    )
+    return _overlap_flags(doc_grams, bench_grams, id_col, min_overlap)
 
 
 def token_contamination_flags(
@@ -852,7 +843,6 @@ def token_contamination_flags(
     bench_tokens_col: str | None = None,
     n: int = 8,
     min_overlap: int = 1,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """``contamination_flags`` for PRE-TOKENIZED sequences (the north-star
     table shape: ``tokens array<int>``): flag corpus sequences sharing ≥
@@ -871,14 +861,21 @@ def token_contamination_flags(
         benchmark.select(F.explode(_gram_hashes(F.col(bench_tok), n)).alias("__g"))
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = df.select(
         F.col(id_col),
         F.explode(F.array_distinct(_gram_hashes(F.col(tokens_col), n))).alias("__g"),
     )
+    return _overlap_flags(doc_grams, bench_grams, id_col, min_overlap)
+
+
+def _overlap_flags(
+    doc_grams: DataFrame, bench_grams: DataFrame, id_col: str, min_overlap: int
+) -> DataFrame:
+    """The shared tail of both decontamination flags: join the corpus'
+    ``(id, __g)`` rows to the broadcast benchmark gram set, count each
+    doc's matches, keep the docs with at least ``min_overlap``."""
     return (
-        doc_grams.join(bench_grams, "__g")
+        doc_grams.join(F.broadcast(bench_grams), "__g")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("overlap_grams"))
         .filter(F.col("overlap_grams") >= min_overlap)

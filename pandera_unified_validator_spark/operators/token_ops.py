@@ -29,19 +29,17 @@ Scale notes (100 TB):
 
 * ``token_sequence_flags`` is a pure projection — no shuffle, prunes to
   the token/length columns, survives any scale.
-* ``duplicated_ngram_coverage`` never shuffles token arrays: documents
-  explode once into ``(doc_id, pos, gram_hash)`` longs; the duplicated-
-  gram set is a partial-aggregated count over distinct (gram, doc)
-  pairs; the join back is a long=long shuffle join (the dup-gram set is
-  unbounded, so it is NOT broadcast); the per-doc coverage window and
-  the final per-doc sum share one hash partitioning on ``doc_id``.
-* ``remove_duplicated_spans`` is not persisted: its gram table crosses
-  one exchange on the gram hash (no token arrays), and one window over
-  each gram's occurrences, sorted by ``(id, pos)``, yields both the
-  canonical keeper and the gram's doc count. The window buffers a
-  gram's occurrence group, which spills, not fails, for a hot
-  boilerplate gram. Only the hits move on, to the ``id``-keyed segment
-  window; token arrays cross only the rebuild join.
+* ``duplicated_ngram_coverage`` and ``remove_duplicated_spans`` share
+  one plan and neither persists: the gram table, ``(id, len, pos,
+  gram-hash)`` rows with no token arrays, crosses one exchange keyed on
+  the gram hash, where one window over each gram's occurrences, sorted
+  by ``(id, pos)``, counts the gram's docs and picks the canonical
+  keeper. The window buffers a gram's occurrence group, which spills,
+  not fails, for a hot boilerplate gram. Only duplicated occurrences
+  move on, to the ``id``-keyed running-max window that merges them into
+  disjoint segments; coverage sums those per id and joins them to the
+  base ``(id, length)`` scan, removal collects them and crosses token
+  arrays only in its rebuild join.
 * ``pack_sequences`` shuffles only ``(doc_id, n_tok, order)`` triples —
   never the token arrays — into ``shards`` independent groups; each
   shard packs locally in one Arrow batch. Bin ids are per-shard, so no
@@ -58,7 +56,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..utils.cache import registry as _cache
 from .sampling import _HASH_SPAN, sample_hash
 from .text import _gram_hashes
 
@@ -171,6 +168,67 @@ def token_sequence_flags(
 # ------------------------------------------- duplicated n-gram coverage ---
 
 
+def _dup_gram_occurrences(
+    df: DataFrame, id_col: str, tokens_col: str, n: int, min_docs: int
+) -> DataFrame:
+    """Every gram occurrence ``(id, __len, __pos, __g, __rn, __dup,
+    __tie)``; ``__dup`` marks a gram found in at least ``min_docs``
+    documents.
+
+    The gram table crosses one exchange, on the gram hash: each gram's
+    occurrences sorted by ``(id, pos)`` give ``__rn`` (1 is the
+    canonical keeper), a change of id starts a new document, and the
+    gram's doc count is the sum of those starts, so the table is read
+    once and never cached. ``__tie`` marks a row that repeats the
+    ``(id, pos)`` before it. Both flags are projected above the count
+    window, so a caller's filter on them compiles to one Filter there."""
+    # the token array feeds _gram_hashes directly: the per-element
+    # xxhash64 pre-pass exists for TEXT grams (hash each word string
+    # once); on int tokens the nested transform measured ~6x slower under
+    # Spark 4's interpreted higher-order functions (5.6 s -> 1.0 s for the
+    # sf0.1 8-gram explode)
+    grams = df.select(
+        F.col(id_col),
+        F.coalesce(F.size(F.col(tokens_col)), F.lit(0)).alias("__len"),
+        F.posexplode(_gram_hashes(F.col(tokens_col), n)).alias("__pos", "__g"),
+    )
+    occ = Window.partitionBy("__g").orderBy(
+        F.col(id_col).asc_nulls_last(), F.col("__pos")
+    )
+    ranked = grams.select(
+        "*",
+        F.row_number().over(occ).alias("__rn"),
+        F.lag(id_col).over(occ).eqNullSafe(F.col(id_col)).alias("__same"),
+        F.lag("__pos").over(occ).alias("__pp"),
+    )
+    new_doc = (F.col("__rn") == 1) | ~F.col("__same")
+    # a row repeating the (id, pos) before it comes from a duplicated
+    # doc_id: it shares that row's fate, so the canonical (id, pos) stays
+    tie = F.col("__same") & (F.col("__pp") == F.col("__pos"))
+    return ranked.withColumn(
+        "__nd", F.sum(new_doc.cast("int")).over(Window.partitionBy("__g"))
+    ).withColumns({"__dup": F.col("__nd") >= min_docs, "__tie": tie})
+
+
+def _segments(hits: DataFrame, id_col: str, n: int) -> DataFrame:
+    """Merge the gram intervals ``[pos, min(pos + n, len))`` of ``hits``
+    into disjoint ``(id, __s, __e)`` segments: a running max of the
+    earlier ends, per id, clips each interval to what they left
+    uncovered."""
+    end = F.least(F.col("__pos") + n, F.col("__len"))
+    w = (
+        Window.partitionBy(id_col)
+        .orderBy("__pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    prev_end = F.coalesce(F.max(end).over(w), F.col("__pos"))
+    return hits.select(
+        F.col(id_col),
+        F.greatest(F.col("__pos"), prev_end).alias("__s"),
+        end.alias("__e"),
+    ).filter(F.col("__e") > F.col("__s"))
+
+
 def duplicated_ngram_coverage(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -201,6 +259,12 @@ def duplicated_ngram_coverage(
     north-star table carries ``n_tok``): the all-docs base projection
     then scans only ``(id, n_tok)`` instead of re-reading the token
     arrays to size them.
+
+    A NULL ``id`` counts as one document toward ``min_docs`` (all
+    NULL-id rows together) and reports 0 coverage. Ids must be unique:
+    rows sharing an id count as one document and share one interval
+    union, so each reports the union of all their grams (``dup_tokens``
+    can exceed ``tok_len``).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
@@ -210,55 +274,13 @@ def duplicated_ngram_coverage(
         else F.coalesce(F.size(F.col(tokens_col)), F.lit(0))
     )
     base = df.select(F.col(id_col), length.alias("__len"))
-    # the exploded gram table feeds BOTH the dup-gram aggregate and the
-    # position join below — persist it (registry-tracked, released by the
-    # caller's operator_cache_scope) so the corpus isn't exploded twice;
-    # the lightweight `base` projection (id + length only) stays a plain
-    # pruned scan.
-    # NOTE: the token array feeds _gram_hashes DIRECTLY — the per-element
-    # xxhash64 pre-pass exists for TEXT grams (hash each word string once);
-    # on int tokens it is pure overhead, and under Spark 4's interpreted
-    # higher-order functions the nested transform measured ~6× slower
-    # (5.6s → 1.0s for the sf0.1 8-gram explode).
-    grams = _cache.persist(
-        df.select(
-            F.col(id_col),
-            F.coalesce(F.size(F.col(tokens_col)), F.lit(0)).alias("__len"),
-            F.posexplode(_gram_hashes(F.col(tokens_col), n)).alias("__pos", "__g"),
-        ),
-        "duplicated_ngram_coverage.grams",
-    )
-    # the dup-gram set only needs the NUMBER of distinct documents per
-    # gram, never the ids — hash the id to a long before the distinct so
-    # the corpus-sized shuffle carries (long, long) rows instead of
-    # (long, string): ~half the bytes through the operator's dominant
-    # exchange. A 2^-64 id collision could undercount one gram's doc
-    # count — the same equality contract gram identity itself carries.
-    dup_grams = (
-        grams.select("__g", F.xxhash64(F.col(id_col)).alias("__dh"))
-        .distinct()
-        .groupBy("__g")
-        .agg(F.count(F.lit(1)).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
-        .select("__g")
-    )
-    hits = grams.join(dup_grams, "__g")
-
-    end = F.least(F.col("__pos") + n, F.col("__len"))
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("__pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_end = F.max(end).over(w)
-    contrib = F.greatest(
-        end - F.greatest(F.col("__pos"), F.coalesce(prev_end, F.col("__pos"))),
-        F.lit(0),
+    hits = _dup_gram_occurrences(df, id_col, tokens_col, n, min_docs).filter(
+        F.col("__dup")
     )
     cov = (
-        hits.withColumn("__c", contrib)
+        _segments(hits, id_col, n)
         .groupBy(id_col)
-        .agg(F.sum("__c").alias("__dup"))
+        .agg(F.sum(F.col("__e") - F.col("__s")).alias("__dup"))
     )
     return base.join(cov, id_col, "left").select(
         F.col(id_col),
@@ -315,52 +337,20 @@ def remove_duplicated_spans(
 
     A NULL ``id`` counts as one document toward ``min_docs`` (all NULL-id
     rows together, as ``groupBy`` keys them), never holds a canonical
-    occurrence, and its documents pass through unchanged."""
+    occurrence, and its documents pass through unchanged. Ids must be
+    unique: rows sharing an id count as one document and share one
+    segment list, so a span cut from one is cut from each (``n_removed``
+    can exceed ``tok_len``)."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    grams = df.select(
-        F.col(id_col),
-        F.coalesce(F.size(F.col(tokens_col)), F.lit(0)).alias("__len"),
-        F.posexplode(_gram_hashes(F.col(tokens_col), n)).alias("__pos", "__g"),
-    )
-    # one exchange on the gram: each gram's occurrences sorted by
-    # (id, pos) — the first row is the canonical keeper, a change of id
-    # starts a new document, and the per-gram doc count is the sum of
-    # those starts, so the gram table is read once and never cached
-    occ = Window.partitionBy("__g").orderBy(
-        F.col(id_col).asc_nulls_last(), F.col("__pos")
-    )
-    ranked = grams.select(
-        "*",
-        F.row_number().over(occ).alias("__rn"),
-        F.lag(id_col).over(occ).eqNullSafe(F.col(id_col)).alias("__same"),
-        F.lag("__pos").over(occ).alias("__pp"),
-    )
-    new_doc = (F.col("__rn") == 1) | ~F.col("__same")
-    # a row repeating the (id, pos) before it comes from a duplicated
-    # doc_id: it shares that row's fate, so the canonical (id, pos) stays
-    tie = F.col("__same") & (F.col("__pp") == F.col("__pos"))
-    hits = ranked.withColumn(
-        "__nd", F.sum(new_doc.cast("int")).over(Window.partitionBy("__g"))
-    ).filter(
-        (F.col("__nd") >= min_docs)
+    hits = _dup_gram_occurrences(df, id_col, tokens_col, n, min_docs).filter(
+        F.col("__dup")
         & (F.col("__rn") > 1)
-        & ~tie
+        & ~F.col("__tie")
         & F.col(id_col).isNotNull()
     )
-    end = F.least(F.col("__pos") + n, F.col("__len"))
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("__pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_end = F.coalesce(F.max(end).over(w), F.col("__pos"))
-    seg_start = F.greatest(F.col("__pos"), prev_end)
     segs = (
-        hits.select(
-            F.col(id_col), seg_start.alias("__s"), end.alias("__e")
-        )
-        .filter(F.col("__e") > F.col("__s"))
+        _segments(hits, id_col, n)
         .groupBy(id_col)
         .agg(
             F.sort_array(

@@ -76,7 +76,9 @@ def test_token_sequence_flags(spark):
 
 
 def _coverage_oracle(docs, n, min_docs):
-    """Pure-python replay: gram -> docs, merge covered intervals."""
+    """Pure-python replay over ``(doc_id, tokens)`` rows: gram -> docs,
+    merge covered intervals. All NULL-id rows together count as one doc
+    toward ``min_docs`` and report 0 coverage."""
     from collections import defaultdict
 
     def grams(toks):
@@ -87,12 +89,12 @@ def _coverage_oracle(docs, n, min_docs):
         return [(i, tuple(toks[i : i + n])) for i in range(len(toks) - n + 1)]
 
     by_gram = defaultdict(set)
-    for d, toks in docs.items():
+    for d, toks in docs:
         for _, g in grams(toks):
             by_gram[g].add(d)
     dup = {g for g, ds in by_gram.items() if len(ds) >= min_docs}
-    out = {}
-    for d, toks in docs.items():
+    out = []
+    for d, toks in docs:
         ivs = [
             (p, min(p + n, len(toks))) for p, g in grams(toks) if g in dup
         ]
@@ -100,7 +102,7 @@ def _coverage_oracle(docs, n, min_docs):
         for s, e in sorted(ivs):
             covered += max(0, e - max(s, end))
             end = max(end, e)
-        out[d] = covered
+        out.append((d, covered if d is not None else 0))
     return out
 
 
@@ -114,7 +116,7 @@ def test_duplicated_ngram_coverage(spark):
         "f": [5, 6],                           # short doc, dup of e (whole-doc gram)
         "g": [],
     }
-    oracle = _coverage_oracle(docs, n=4, min_docs=2)
+    oracle = dict(_coverage_oracle(docs.items(), n=4, min_docs=2))
     df = spark.createDataFrame(
         [(k, v) for k, v in docs.items()], "doc_id string, tokens array<int>"
     )
@@ -149,20 +151,20 @@ def test_duplicated_ngram_coverage_n_tok_col(spark):
 @settings(max_examples=15, deadline=None)
 @given(
     st.lists(
-        st.lists(st.integers(0, 5), min_size=0, max_size=12),
+        st.tuples(
+            st.booleans(),
+            st.lists(st.integers(0, 5), min_size=0, max_size=12),
+        ),
         min_size=2,
         max_size=10,
     )
 )
 def test_duplicated_ngram_coverage_property(spark, token_lists):
-    docs = {f"d{i}": t for i, t in enumerate(token_lists)}
-    oracle = _coverage_oracle(docs, n=3, min_docs=2)
-    df = spark.createDataFrame(
-        [(k, v) for k, v in docs.items()], "doc_id string, tokens array<int>"
-    )
+    docs = [(None if null else f"d{i}", t) for i, (null, t) in enumerate(token_lists)]
+    df = spark.createDataFrame(docs, "doc_id string, tokens array<int>")
     out = duplicated_ngram_coverage(df, "doc_id", "tokens", n=3, min_docs=2)
-    got = {r["doc_id"]: r["dup_tokens"] for r in out.collect()}
-    assert got == oracle
+    got = sorted(((r["doc_id"], r["dup_tokens"]) for r in out.collect()), key=repr)
+    assert got == sorted(_coverage_oracle(docs, n=3, min_docs=2), key=repr)
 
 
 # ------------------------------------------------------------ packing ---
@@ -580,43 +582,60 @@ def test_remove_duplicated_spans_property(spark, token_lists):
 
 @pytest.mark.parametrize("parts", [1, 7])
 def test_remove_duplicated_spans_edges(spark, parts):
-    """Pinned outputs (n=3, min_docs=2) on 1 and 7 input partitions: a
-    NULL-id doc counts toward min_docs but passes through unchanged; two
-    docs sharing the canonical doc_id both keep the canonical
-    occurrence; a gram present in every doc keeps only its first."""
+    """Pinned outputs of both operators (n=3, min_docs=2) on 1 and 7
+    input partitions: a NULL-id doc counts toward min_docs but passes
+    through unchanged and reports 0 coverage; two docs sharing the
+    canonical doc_id both keep the canonical occurrence; a gram present
+    in every doc keeps only its first and covers every doc."""
     cases = [
         ([("a", [1, 2, 3, 4, 1, 2, 3, 4]), (None, [1, 2, 3, 4])],
-         [(None, [1, 2, 3, 4], 4, 0), ("a", [1, 2, 3, 4], 8, 4)]),
+         [(None, [1, 2, 3, 4], 4, 0), ("a", [1, 2, 3, 4], 8, 4)],
+         [("a", 8, 8, 1.0), (None, 4, 0, 0.0)]),
         ([("b", [7, 7, 7, 7]), (None, [7, 7, 7, 7, 7])],
-         [(None, [7, 7, 7, 7, 7], 5, 0), ("b", [7], 4, 3)]),
+         [(None, [7, 7, 7, 7, 7], 5, 0), ("b", [7], 4, 3)],
+         [("b", 4, 4, 1.0), (None, 5, 0, 0.0)]),
         ([("x", [1, 2, 3, 9]), ("x", [1, 2, 3, 8]), ("y", [1, 2, 3])],
-         [("x", [1, 2, 3, 8], 4, 0), ("x", [1, 2, 3, 9], 4, 0), ("y", [], 3, 3)]),
+         [("x", [1, 2, 3, 8], 4, 0), ("x", [1, 2, 3, 9], 4, 0), ("y", [], 3, 3)],
+         [("x", 4, 3, 0.75), ("x", 4, 3, 0.75), ("y", 3, 3, 1.0)]),
         ([(f"d{i:03d}", [1, 2, 3, 4, 5, 6]) for i in range(200)],
          [("d000", [1, 2, 3, 4, 5, 6], 6, 0)]
-         + [(f"d{i:03d}", [], 6, 6) for i in range(1, 200)]),
+         + [(f"d{i:03d}", [], 6, 6) for i in range(1, 200)],
+         [(f"d{i:03d}", 6, 6, 1.0) for i in range(200)]),
     ]
-    for docs, want in cases:
+    for docs, want, want_cov in cases:
         df = spark.createDataFrame(docs, "doc_id string, tokens array<int>")
         got = _removal_rows(df.repartition(parts), 3, 2)
         assert got == sorted(want, key=repr)
         assert got == sorted(_removal_oracle(docs, 3, 2), key=repr)
+        cov = duplicated_ngram_coverage(df.repartition(parts), n=3, min_docs=2)
+        cov = sorted(map(tuple, cov.collect()), key=repr)
+        assert cov == sorted(want_cov, key=repr)
+        assert sorted(((r[0], r[2]) for r in cov), key=repr) == sorted(
+            _coverage_oracle(docs, 3, 2), key=repr
+        )
 
 
 def test_remove_duplicated_spans_plan(spark, tmp_path):
-    """The gram table crosses one exchange, keyed on the gram hash, and
-    is neither cached nor registered with the operator-cache registry."""
+    """For both duplicated-gram operators the gram table crosses one
+    exchange, keyed on the gram hash, and is neither cached nor
+    registered with the operator-cache registry."""
     docs = [(f"d{i}", [i % 5, 9, 8, 7, 6, 5, i]) for i in range(40)]
     path = str(tmp_path / "docs")
     spark.createDataFrame(docs, "doc_id string, tokens array<int>").write.parquet(path)
-    before = registry.labels()
-    out = remove_duplicated_spans(spark.read.parquet(path), n=4)
-    rows = out.collect()
-    assert registry.labels() == before
-    assert sum(r["n_removed"] for r in rows) > 0
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning(__g") == 1, final
+    for op, col in (
+        (remove_duplicated_spans, "n_removed"),
+        (duplicated_ngram_coverage, "dup_tokens"),
+    ):
+        before = registry.labels()
+        out = op(spark.read.parquet(path), n=4)
+        rows = out.collect()
+        assert registry.labels() == before, op.__name__
+        assert sum(r[col] for r in rows) > 0, op.__name__
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan, plan
+        assert "InMemoryTableScan" not in plan, plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("Exchange hashpartitioning(__g") == 1, final
 
 
 def test_token_ops_reject_bad_sizes(spark):

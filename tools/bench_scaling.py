@@ -7,14 +7,14 @@ efficiencies. ``--job`` picks the measured body:
 
 * ``validate`` (default): full-check validation of the dirty token table;
 * ``token_ops``: ``duplicated_ngram_coverage`` over the clean token table,
-  the token axis's shuffle-heavy shape (gram explode → distinct (gram, doc)
-  → dup-gram aggregate → position join → per-doc window + sum).
+  the token axis's shuffle-heavy shape (gram explode → per-gram occurrence
+  window → per-doc running-max window + sum → join to the base scan).
 
 Every measured run follows one protocol (hard-won on a shared VM):
 * fresh plan per run — re-collecting the same DataFrame object reuses the
   prior run's shuffle map outputs and only re-executes the final stage;
 * a fresh ``operator_cache_scope()`` per run, so registry-persisted scratch
-  (gram tables, dup-key sets) is released and every run recomputes it;
+  (dup-key sets) is released and every run recomputes it;
 * a driver GC after every run — shuffle files outlive a run until the
   ContextCleaner collects their dependencies (8 back-to-back runs once
   filled the tmpfs local dir);
