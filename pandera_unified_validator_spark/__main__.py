@@ -168,8 +168,10 @@ def cmd_sample(args) -> int:
         )
     else:
         out = deterministic_sample(df, args.key, args.fraction, seed=args.seed)
-    n = out.count()
     out.write.mode("overwrite").parquet(args.output)
+    # count the written output, not `out`: a second action would re-run the
+    # sample plan over the whole input
+    n = spark.read.parquet(args.output).count()
     print(f"sampled {n:,} rows -> {args.output}")
     return 0
 

@@ -45,19 +45,23 @@ def cosine_pandas_udf():
     return make
 
 
-def hyperplane_signature_udf(dim: int, n_bits: int = 16, seed: int = 42):
-    """Random-hyperplane LSH signature (sign of dot with seeded Gaussian
-    planes) as an Arrow-vectorized UDF → one integer bucket per row.
-    Deterministic: planes are a pure function of (seed, dim, n_bits)."""
+def _hyperplanes(dim: int, n_bits: int, seed: int):
+    """The seeded plane matrix and bit weights of one hyperplane signature:
+    ``(planes (dim, n_bits) float64, weights (n_bits,) int64)``. Planes are
+    a pure function of (dim, n_bits, seed), quantized to float32 (a stable
+    literal embedding in SQL oracles) and widened back, so dot products
+    accumulate in float64 and the SIGN of each projection is bit-comparable
+    with SQL-engine double math."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
-    # planes quantized to float32 (stable literal embedding in SQL oracles),
-    # dot products accumulated in float64 so the SIGN of each projection is
-    # bit-comparable with SQL-engine double math
-    planes = rng.standard_normal((dim, n_bits)).astype("float32").astype("float64")
+    planes = np.random.RandomState(seed).standard_normal((dim, n_bits))
     weights = (1 << np.arange(n_bits)).astype("int64")
+    return planes.astype("float32").astype("float64"), weights
 
+
+def _signature_udf(planes, weights):
+    """Arrow UDF: per row, the sum of ``weights[j]`` over the planes ``j``
+    with a positive dot product."""
     @F.pandas_udf(T.LongType())
     def _sig(col):
         import numpy as np
@@ -68,6 +72,13 @@ def hyperplane_signature_udf(dim: int, n_bits: int = 16, seed: int = 42):
         return pd.Series(bits @ weights)
 
     return _sig
+
+
+def hyperplane_signature_udf(dim: int, n_bits: int = 16, seed: int = 42):
+    """Random-hyperplane LSH signature (sign of dot with seeded Gaussian
+    planes) as an Arrow-vectorized UDF → one integer bucket per row.
+    Deterministic: planes are a pure function of (seed, dim, n_bits)."""
+    return _signature_udf(*_hyperplanes(dim, n_bits, seed))
 
 
 def hyperplane_signature2_udf(dim: int, n_bits: int = 16, seed: int = 42):
@@ -85,20 +96,8 @@ def hyperplane_signature2_udf(dim: int, n_bits: int = 16, seed: int = 42):
 
     if 2 * n_bits > 62:
         raise ValueError(f"n_bits={n_bits}: two packed signatures need 2*n_bits <= 62")
-    p1 = np.random.RandomState(seed).standard_normal((dim, n_bits))
-    p2 = np.random.RandomState(seed + 1).standard_normal((dim, n_bits))
-    planes = np.concatenate([p1, p2], axis=1).astype("float32").astype("float64")
-    weights = np.concatenate(
-        [(1 << np.arange(n_bits)), (1 << (np.arange(n_bits) + n_bits))]
-    ).astype("int64")
-
-    @F.pandas_udf(T.LongType())
-    def _sig2(col):
-        import numpy as np
-        import pandas as pd
-
-        mat = np.vstack(col.to_numpy()).astype("float64")
-        bits = (mat @ planes) > 0
-        return pd.Series(bits @ weights)
-
-    return _sig2
+    p1, w = _hyperplanes(dim, n_bits, seed)
+    p2, _ = _hyperplanes(dim, n_bits, seed + 1)
+    return _signature_udf(
+        np.concatenate([p1, p2], axis=1), np.concatenate([w, w << n_bits])
+    )

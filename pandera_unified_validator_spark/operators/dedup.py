@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import _gram_hashes, shingle_hashes, words
+from .text import _gram_hashes, _gram_join, shingle_hashes, words
 from ..functions.vectors import hyperplane_signature2_udf, hyperplane_signature_udf
 from ..plans.stats import plan_size_bytes as _plan_size_bytes
 from ..utils.cache import registry as _cache
@@ -34,7 +34,6 @@ __all__ = [
     "dedup_exact",
     "shingles",
     "shingle_hashes",
-    "minhash_signature",
     "lsh_candidate_pairs",
     "jaccard",
     "minhash_dedup_pairs",
@@ -109,37 +108,11 @@ def shingles(text: Column | str, k: int = 5) -> Column:
     oracle-replayable form (DuckDB rebuilds the same strings); the dedup
     pipelines use ``shingle_hashes`` — same gram identity, no per-gram
     string allocation."""
-    ws = words(text)
-    n = F.size(ws)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(ws, i, k)),
-    )
-    return F.when(n > 0, grams).otherwise(F.array().cast("array<string>"))
+    return _gram_join(words(text), k, " ")
 
 
 # shingle_hashes / _gram_hashes live in operators.text (gram machinery is
 # shared with repetition scoring there); re-exported here for API stability
-
-
-def minhash_signature(text: Column | str, num_hashes: int = 64, shingle_k: int = 5) -> Column:
-    """MinHash signature as a single Column: array of ``num_hashes``
-    min-over-shingles, each seeded variant derived from the 8-byte base hash
-    — ``min_s xxhash64(seed, xxhash64(s))`` — the SAME scheme as
-    ``minhash_signatures_df``, so signatures from the two paths are
-    bit-identical and freely mixable (banding sigs from both is safe;
-    ``tests/test_dedup.py`` asserts parity).
-
-    NOTE: nested higher-order functions run interpreted — fine for ad-hoc
-    per-row use, but the corpus-scale path is ``minhash_signatures_df``
-    (explode → codegen'd hash columns → map-side-combined groupBy-min),
-    measured ~7x faster."""
-    shh = shingle_hashes(text, shingle_k)
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(F.transform(shh, lambda h: F.xxhash64(seed, h))),
-    )
-    return F.when(F.size(shh) > 0, sig)
 
 
 def minhash_signatures_df(

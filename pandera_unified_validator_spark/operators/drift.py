@@ -19,7 +19,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .profiler import ProfileReport
+from .profiler import ProfileReport, _bin_width
 
 __all__ = [
     "DriftReport",
@@ -63,12 +63,7 @@ def histogram_df(df: DataFrame, column: str, lo: float, hi: float, bins: int) ->
     """Lazy equal-width histogram (bucket, n) over fixed [lo, hi] — values
     clamp into boundary buckets, nulls drop. One groupBy when acted on."""
     c = F.col(column).cast("double")
-    # guard the COMPUTED width: a subnormal hi-lo span divided by bins
-    # underflows to 0.0 and ANSI mode aborts on the division (hypothesis
-    # found this in the profiler's sibling expression)
-    width = (hi - lo) / bins
-    if not width > 0.0:
-        width = 1.0
+    width = _bin_width(lo, hi, bins)
     bucket = F.least(
         F.greatest(F.floor((c - F.lit(float(lo))) / F.lit(width)), F.lit(0)),
         F.lit(bins - 1),
@@ -302,7 +297,7 @@ def numeric_drift(
     lo, hi = mm["lo"], mm["hi"]
     if lo is None or hi is None or hi <= lo:
         return DriftReport(drifted=False, notes=[f"column {column!r}: degenerate baseline"])
-    width = (hi - lo) / bins
+    width = _bin_width(lo, hi, bins)
     edges = [lo + i * width for i in range(bins + 1)]
     e = histogram_counts(baseline, column, edges)
     a = histogram_counts(current, column, edges)

@@ -33,6 +33,18 @@ _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
 _PATTERNS = (r"^\d+$", r"^[A-Za-z0-9_-]+$", r"^[A-Za-z\s]+$")
 
 
+def _bin_width(lo: float, hi: float, bins: int) -> float:
+    """Width of one of ``bins`` equal-width buckets over [lo, hi] — the one
+    definition every histogram shares (``DataProfiler.profile``,
+    ``drift.histogram_df``, ``drift.numeric_drift``). Guards the COMPUTED
+    width, not hi > lo: a subnormal span (hi - lo = 5e-324) underflows to
+    0.0 when divided by the bin count, and ANSI mode turns the bucket
+    division into a job-killing DIVIDE_BY_ZERO (found by hypothesis). A
+    degenerate span gets width 1.0, so every value lands in bucket 0."""
+    width = (hi - lo) / bins
+    return width if width > 0.0 else 1.0
+
+
 @dataclass
 class ColumnProfile:
     name: str
@@ -346,20 +358,13 @@ class DataProfiler:
         # A7 histograms: ALL numeric columns in one job — unpivot to
         # (col, value), bucket with the min/max already computed, group once.
         if numeric and n:
-            bounded = [
-                c for c in numeric
-                if profiles[c].min is not None and profiles[c].max is not None
-            ]
+            span: dict[str, tuple[float, float]] = {}  # col -> (lo, width)
+            for c in numeric:
+                if profiles[c].min is not None and profiles[c].max is not None:
+                    lo, hi = float(profiles[c].min), float(profiles[c].max)
+                    span[c] = (lo, _bin_width(lo, hi, self.histogram_bins))
             exprs = []
-            for c in bounded:
-                lo, hi = float(profiles[c].min), float(profiles[c].max)
-                # guard the COMPUTED width, not hi > lo: a subnormal span
-                # (hi - lo = 5e-324) underflows to 0.0 when divided by the
-                # bin count, and ANSI mode turns that into a job-killing
-                # DIVIDE_BY_ZERO (found by hypothesis)
-                width = (hi - lo) / self.histogram_bins
-                if not width > 0.0:
-                    width = 1.0
+            for c, (lo, width) in span.items():
                 bucket = F.least(
                     F.floor((F.col(c).cast("double") - F.lit(lo)) / F.lit(width)),
                     F.lit(self.histogram_bins - 1),
@@ -377,11 +382,7 @@ class DataProfiler:
                 by_col: dict[str, dict[int, int]] = {}
                 for r in hist:
                     by_col.setdefault(r["col"], {})[r["bucket"]] = r["count"]
-                for c in bounded:
-                    lo, hi = float(profiles[c].min), float(profiles[c].max)
-                    width = (hi - lo) / self.histogram_bins
-                    if not width > 0.0:  # subnormal span underflows to 0
-                        width = 1.0
+                for c, (lo, width) in span.items():
                     counts = by_col.get(c, {})
                     profiles[c].histogram = [
                         (lo + i * width, lo + (i + 1) * width, counts.get(i, 0))

@@ -12,7 +12,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_pandas_udf, hyperplane_signature_udf
+from ..functions.vectors import _hyperplanes, _signature_udf, cosine_pandas_udf
 
 __all__ = ["brute_force_topk", "lsh_topk"]
 
@@ -67,14 +67,10 @@ def lsh_topk(
         raise ValueError(
             f"multiprobe must be in [0, n_bits={n_bits}], got {multiprobe}"
         )
-    sig = hyperplane_signature_udf(dim, n_bits, seed)
-    rng = np.random.RandomState(seed)
-    # same quantize-then-float64 discipline as hyperplane_signature_udf so
-    # the query lands in the same bucket the corpus UDF assigns
-    planes = rng.standard_normal((dim, n_bits)).astype("float32").astype("float64")
-    qbits = (np.asarray(query, dtype="float64") @ planes) > 0
-    weights = (1 << np.arange(n_bits)).astype("int64")
-    qbucket = int(qbits @ weights)
+    # the corpus UDF's own planes, so the query lands in the bucket it assigns
+    planes, weights = _hyperplanes(dim, n_bits, seed)
+    sig = _signature_udf(planes, weights)
+    qbucket = int(((np.asarray(query, dtype="float64") @ planes) > 0) @ weights)
 
     probes = {qbucket}
     for radius in range(1, multiprobe + 1):

@@ -38,8 +38,6 @@ __all__ = [
     "gopher_quality_flags",
     "unigram_lm",
     "unigram_doc_scores",
-    "gram_strings",
-    "token_gram_strings",
     "GramClassifier",
     "train_gram_classifier",
     "score_gram_classifier",
@@ -650,12 +648,20 @@ def unigram_doc_scores(
 
 # ------------------------------ hashed-ngram linear quality classifier ----
 def _gram_join(ws: Column, k: int, sep: str) -> Column:
-    """k-gram strings from an ALREADY-BUILT element-string array column
-    (the shared tail of :func:`gram_strings` / :func:`token_gram_strings`):
-    zip-of-shifted-slices, whole-doc gram for short docs, empty for empty.
-    Callers that need several k values should project ``ws`` once and call
-    this per k — re-deriving the element array per k doubles the build
-    (round 7: the md5 gram explode builds 1-grams AND 2-grams)."""
+    """k-gram strings from an ALREADY-BUILT element-string array column —
+    the package's one string-gram builder (``dedup.shingles`` and the md5
+    gram buckets call it): grams joined by ``sep``, whole-doc gram for docs
+    shorter than k, empty for empty or NULL. The oracle-replayable gram
+    form: DuckDB rebuilds identical strings.
+
+    Built by zipping k shifted slices (k-1 ``zip_with`` passes with a plain
+    concat lambda), NOT a ``transform`` whose lambda slices per element —
+    that form re-allocated a sub-array per gram under Spark 4's interpreted
+    higher-order functions and measured 12× slower at sf0.1 (6.9s → 0.6s
+    for the 1+2-gram md5 explode). Callers that need several k values
+    should project ``ws`` once and call this per k — re-deriving the
+    element array per k doubles the build (round 7: the md5 gram explode
+    builds 1-grams AND 2-grams)."""
     n = F.coalesce(F.size(ws), F.lit(0))
     if k == 1:
         return F.when(n > 0, ws).otherwise(F.array().cast("array<string>"))
@@ -668,62 +674,6 @@ def _gram_join(ws: Column, k: int, sep: str) -> Column:
     return (
         F.when(n >= k, acc)
         .when(n > 0, F.array(F.concat_ws(sep, ws)))
-        .otherwise(F.array().cast("array<string>"))
-    )
-
-
-def gram_strings(text: Column | str, k: int = 1) -> Column:
-    """Word k-gram array as lowercased STRINGS; docs shorter than k words
-    yield one whole-doc gram (``dedup.shingles``' short-doc rule, so the
-    string and hash gram identities agree everywhere). The oracle-
-    replayable gram form — DuckDB rebuilds identical strings.
-
-    Built by zipping k shifted slices of the word array (k-1 ``zip_with``
-    passes with a plain concat lambda), NOT a ``transform`` whose lambda
-    slices per element — that form re-allocated a sub-array per gram
-    under Spark 4's interpreted higher-order functions and measured 12×
-    slower at sf0.1 (6.9s → 0.6s for the 1+2-gram md5 explode)."""
-    ws = words(text)
-    n = F.size(ws)
-    if k == 1:
-        # NULL text -> empty array, matching the k>=2 when-chain below and
-        # token_gram_strings' documented contract (a raw `ws` returns NULL)
-        return F.coalesce(ws, F.array().cast("array<string>"))
-    cnt = F.greatest(n - (k - 1), F.lit(0))
-    acc = F.slice(ws, 1, cnt)
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc, F.slice(ws, 1 + j, cnt), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return (
-        F.when(n >= k, acc)
-        .when(n > 0, F.array(F.concat_ws(" ", ws)))
-        .otherwise(F.array().cast("array<string>"))
-    )
-
-
-def token_gram_strings(tokens: Column | str, k: int = 1) -> Column:
-    """Token k-gram array as comma-joined STRINGS over an ``array<int>``
-    column — the oracle-replayable gram form for the TOKEN payload
-    (DuckDB: ``array_to_string(list_slice(tk, i, i+k-1), ',')``). Same
-    short-doc rule as :func:`gram_strings` / ``_gram_hashes``: a sequence
-    shorter than ``k`` yields one whole-sequence gram; NULL → empty.
-    Built by the same zip-of-shifted-slices trick (per-element slicing
-    transforms are ~12× slower under Spark 4's interpreted HOFs)."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    s = F.transform(t, lambda x: x.cast("string"))
-    n = F.coalesce(F.size(s), F.lit(0))
-    if k == 1:
-        return F.when(n > 0, s).otherwise(F.array().cast("array<string>"))
-    cnt = F.greatest(n - (k - 1), F.lit(0))
-    acc = F.slice(s, 1, cnt)
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc, F.slice(s, 1 + j, cnt), lambda a, b: F.concat(a, F.lit(","), b)
-        )
-    return (
-        F.when(n >= k, acc)
-        .when(n > 0, F.array(F.concat_ws(",", s)))
         .otherwise(F.array().cast("array<string>"))
     )
 
@@ -782,8 +732,8 @@ def _gram_bucket_rows(
         # stage the element-string array ONCE (materialized projection —
         # CollapseProject keeps it because it is referenced per k), then
         # build every k-gram level from the staged column: the round-6 form
-        # re-derived the word/stringified-token array inside each
-        # gram_strings(k) call — ngram_max full rebuilds per row
+        # re-derived the word/stringified-token array once per k — ngram_max
+        # full rebuilds per row
         if payload == "text":
             base, sep = words(text_col), " "
         else:

@@ -106,8 +106,7 @@ class GlobalCheck:
 
     name: str
     column: str
-    check: str                       # "unique" | "referential"
-    ref_values: tuple | None = None  # for referential executed as broadcast join
+    check: str       # "unique" | "referential"
 
 
 def _null_safe(col: Column, pred: Column) -> Column:

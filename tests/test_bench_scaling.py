@@ -41,8 +41,12 @@ def test_write_md_renders_every_committed_cache(bench_scaling, tmp_path):
     assert _bench_state() == before
 
 
-@pytest.mark.parametrize("job", ["validate", "token_ops"])
-def test_child_prints_one_result_line(bench_scaling, job, tmp_path):
+@pytest.mark.parametrize(
+    "job,heap",
+    [pytest.param("validate", "1g", id="validate"),
+     pytest.param("token_ops", None, id="token_ops")],
+)
+def test_child_prints_one_result_line(bench_scaling, job, heap, tmp_path):
     before = _bench_state()
     env = {
         **os.environ,
@@ -51,8 +55,11 @@ def test_child_prints_one_result_line(bench_scaling, job, tmp_path):
         "PUV_SCALE_RUNS": "1",
         "PUV_SCALE_PATH": str(tmp_path / "input"),
         "PUV_SCALE_LOCAL_DIR": str(tmp_path / "local"),
-        "PUV_DRIVER_MEMORY": "1g",
     }
+    # one child runs with a pinned heap, the other with the default
+    env.pop("PUV_DRIVER_MEMORY", None)
+    if heap:
+        env["PUV_DRIVER_MEMORY"] = heap
     out = subprocess.run(
         [sys.executable, TOOL, "--job", job, "--child", "2"],
         capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
@@ -65,6 +72,10 @@ def test_child_prints_one_result_line(bench_scaling, job, tmp_path):
     read = {"cpus", "rows", "tokens", "sec", bench_scaling.JOBS[job]["rate"]}
     assert read <= rec.keys(), rec
     assert rec["cpus"] == 2 and rec["rows"] == 3000 and len(rec["all_sec"]) == 1
+    # a local child runs with the tool's driver heap (12g, capped at half
+    # the host's memory), not the package's 24g
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    assert rec["driver_heap_mb"] <= (1024 if heap else min(12 * 1024, half_mb))
     pairs = bench_scaling._pairs({2: rec, 8: rec}, bench_scaling.JOBS[job]["rate"])
     assert pairs["2->8"]["scaling_efficiency"] == 0.25
     assert _bench_state() == before

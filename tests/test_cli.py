@@ -105,6 +105,8 @@ def test_cli_dedup_and_sample(spark, tmp_path):
                  "--strata", "source", "--fractions", "s1=1.0,s2=0.5")
     assert r3.returncode == 0, r3.stderr[-2000:]
     samp = spark.read.parquet(out3)
+    # the printed count is the written output's
+    assert f"sampled {samp.count()} rows" in r3.stdout.replace(",", "")
     by = {x["source"]: x["n"] for x in
           samp.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert by["s1"] == 21                          # whole stratum kept

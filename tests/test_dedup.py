@@ -9,7 +9,7 @@ from pandera_unified_validator_spark.operators.dedup import (
     embedding_near_dup_pairs,
     jaccard,
     minhash_dedup_pairs,
-    minhash_signature,
+    minhash_signatures_df,
     ngram_jaccard_pairs,
     shingles,
     simhash,
@@ -53,26 +53,6 @@ def test_dedup_exact_full_row_distinct(spark):
     assert out == [(1, "a"), (1, "b"), (2, "a")]
 
 
-def test_minhash_signature_paths_bit_identical(spark, corpus):
-    """The per-row Column path and the corpus-scale explode/groupBy path must
-    produce BIT-IDENTICAL signatures (same derived-hash scheme), so outputs
-    of the two are freely mixable in one banding join."""
-    from pandera_unified_validator_spark.operators.dedup import minhash_signatures_df
-
-    per_row = {
-        r["doc_id"]: r["s"]
-        for r in corpus.select(
-            "doc_id", minhash_signature("text", 16, 5).alias("s")
-        ).collect()
-        if r["s"] is not None
-    }
-    bulk = {
-        r["doc_id"]: r["__sig"]
-        for r in minhash_signatures_df(corpus, "doc_id", "text", 16, 5).collect()
-    }
-    assert per_row == bulk
-
-
 def test_shingles_and_jaccard(spark):
     df = spark.createDataFrame([("a b c d e", "a b c d x")], "x string, y string")
     row = df.select(
@@ -84,11 +64,30 @@ def test_shingles_and_jaccard(spark):
     assert row["j"] == 0.5
     short = spark.createDataFrame([("a b",)], "x string")
     assert short.select(F.size(shingles("x", 5)).alias("n")).collect()[0]["n"] == 1
+    # NULL, empty and whitespace-only text give no shingle; k=1 is the word
+    # list (outputs pinned from the per-element slicing builder)
+    edge = spark.createDataFrame(
+        [(0, None), (1, ""), (2, " \t\n "), (3, "The  Quick\tbrown\nFOX"), (4, "a")],
+        "i int, x string",
+    )
+    got = {
+        r["i"]: (r["k1"], r["k3"])
+        for r in edge.select(
+            "i", shingles("x", 1).alias("k1"), shingles("x", 3).alias("k3")
+        ).collect()
+    }
+    assert got == {
+        0: ([], []),
+        1: ([], []),
+        2: ([], []),
+        3: (["the", "quick", "brown", "fox"], ["the quick brown", "quick brown fox"]),
+        4: (["a"], ["a"]),
+    }
 
 
 def test_minhash_signature_similarity(spark, corpus):
-    sig = corpus.select("doc_id", minhash_signature("text", 32, 5).alias("s")).collect()
-    by = {r["doc_id"]: r["s"] for r in sig}
+    sig = minhash_signatures_df(corpus, "doc_id", "text", 32, 5).collect()
+    by = {r["doc_id"]: r["__sig"] for r in sig}
     assert by[1] == by[4]  # identical docs → identical signature
     agree_near = sum(a == b for a, b in zip(by[1], by[2]))
     agree_far = sum(a == b for a, b in zip(by[1], by[3]))
@@ -579,7 +578,6 @@ def test_minhash_incremental_reads_store_not_text(spark, tmp_path):
     signature-width probe raises on parameter mismatch."""
     from pandera_unified_validator_spark.operators.dedup import (
         minhash_dedup_pairs_incremental,
-        minhash_signatures_df,
     )
 
     old_v1 = spark.createDataFrame(

@@ -46,8 +46,8 @@ Environment (either job; unset = the job's default in ``JOBS``):
   PUV_SCALE_ROWS, PUV_SCALE_RUNS, PUV_SCALE_EXEC_CORES, PUV_SCALE_EXEC_MEMORY;
   PUV_SCALE_WARMUPS (4), PUV_SCALE_LEVELS (local, 2,8,32),
   PUV_SCALE_EXECUTORS (standalone, 2,8), PUV_SCALE_PATH (input parquet),
-  PUV_SCALE_LOCAL_DIR (block-manager dirs), PUV_DRIVER_MEMORY (standalone
-  driver, 12g). Run validate with PUV_SCALE_ROWS=96000000 for the recorded
+  PUV_SCALE_LOCAL_DIR (block-manager dirs), PUV_DRIVER_MEMORY (driver
+  heap in either mode; 12g, capped at half the host's physical memory). Run validate with PUV_SCALE_ROWS=96000000 for the recorded
   evidence (the larger input keeps fixed per-job cost <5% of wall time).
 """
 
@@ -205,6 +205,16 @@ def _measure(spark, job: str) -> dict:
     }
 
 
+def _driver_memory() -> str:
+    """The driver heap of every child: ``PUV_DRIVER_MEMORY`` if set, else
+    12g capped at half the host's physical memory (the package's 24g
+    default once held a local child at 10 GB RSS on a 15 GB host)."""
+    if "PUV_DRIVER_MEMORY" in os.environ:
+        return os.environ["PUV_DRIVER_MEMORY"]
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(12 * 1024, half_mb)}m"
+
+
 def child(job: str, n_exec: int, cores: int) -> None:
     """One measured run, printed as one JSON line. ``n_exec == 0`` is one
     ``local[cores]`` JVM; otherwise ``n_exec`` executor JVMs × ``cores``
@@ -216,11 +226,11 @@ def child(job: str, n_exec: int, cores: int) -> None:
     conf = {
         "spark.sql.files.maxPartitionBytes": str(24 * 1024 * 1024),
         "spark.local.dir": LOCAL_DIR,
+        "spark.driver.memory": _driver_memory(),
     }
     if n_exec:
         master, tag = MASTER_URL, {"n_exec": n_exec, "cores_each": cores}
         conf.update({
-            "spark.driver.memory": os.environ.get("PUV_DRIVER_MEMORY", "12g"),
             "spark.cores.max": str(n_exec * cores),
             "spark.executor.cores": str(cores),
             "spark.executor.memory": _setting(job, "exec_memory"),
@@ -237,6 +247,8 @@ def child(job: str, n_exec: int, cores: int) -> None:
         shuffle_partitions=JOBS[job]["partitions"],
         extra_conf=conf,
     )
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    tag["driver_heap_mb"] = heap >> 20
     print(json.dumps({**tag, **_measure(spark, job)}))
     spark.stop()
 
