@@ -7,7 +7,7 @@ components for the 100 TB corpus use case. Scale shapes:
 * exact: one map-side-combined groupBy on the exact key struct — every
   input column crosses the shuffle exactly once (round 3 dropped the
   redundant digest: 2.6x fewer exchange bytes on wide text keys);
-* MinHash/SimHash LSH: candidate generation via band-bucket equi-join — the
+* MinHash LSH: candidate generation via band-bucket equi-join — the
   only all-pairs-free way to near-dedup 10^12 docs; verification only runs
   on candidates;
 * everything is built-in expressions (codegen) except the embedding path
@@ -39,7 +39,6 @@ __all__ = [
     "minhash_dedup_pairs",
     "minhash_dedup_pairs_incremental",
     "simhash",
-    "simhash_near_dup_pairs",
     "ngram_jaccard_pairs",
     "embedding_near_dup_pairs",
     "contamination_flags",
@@ -444,50 +443,6 @@ def simhash(
         term = F.shiftleft(bit, j)
         fp = term if fp is None else fp.bitwiseXOR(term)  # disjoint bits: XOR == OR
     return votes.select(F.col(id_col), fp.alias("simhash"))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup via banded fingerprint (any identical 16-bit band →
-    candidate; guaranteed to catch all pairs with < ``bands`` differing bits)
-    then exact popcount(xor) ≤ max_hamming. Returns (id_a, id_b, hamming)."""
-    fps = simhash(df, id_col, text_col)
-    width = 64 // bands
-    mask = (1 << width) - 1
-    banded = fps.select(
-        F.col(id_col).alias("__id"),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band", "__bucket"),
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.__band") == F.col("r.__band"))
-            & (F.col("l.__bucket") == F.col("r.__bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(
-            F.col("l.__id").alias("id_a"),
-            F.col("r.__id").alias("id_b"),
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
-        )
-        .distinct()
-    )
-    return cand.filter(F.col("hamming") <= max_hamming)
 
 
 # ----------------------------------------------------- n-gram Jaccard ------

@@ -1,26 +1,21 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns + typed metadata, processed via Arrow-batched ``mapInPandas``.
+"""Multimodal column plumbing: media as an opaque ``binary`` payload
+column + typed metadata columns, with image features decoded via
+Arrow-batched ``mapInPandas``.
 
-The Spark-side contract (schemas, partitioning, UDF signatures, batch shape)
-is real and tested. The codec layer (round 4) is REAL for the formats a
-bare stdlib+numpy runtime can parse — uncompressed 24-bit **BMP** (decode,
-nearest-neighbor resize, re-encode), **PNG** (8-bit gray/RGB/RGBA, all five
-row filters, stdlib zlib) and PCM **WAV** (decode to samples) —
-with a soft PIL dispatch for compressed images when the library exists;
-anything else raises ``NotImplementedError`` rather than silently emitting
-stub output, and ``fake=True`` substitutes a deterministic hash-derived
-feature vector so pipelines are testable without any payload parsing at
-all. Payload bytes are only ever touched inside the mapInPandas stage.
+The image codecs are stdlib+numpy and deterministic: uncompressed 24-bit
+**BMP**, **PNG** (8-bit gray/RGB/RGBA, all five row filters, stdlib zlib)
+and baseline **JPEG** (4:4:4/4:2:0, restart intervals). Other formats go
+to PIL when it is importable and otherwise raise ``NotImplementedError``
+rather than emitting stub features. Payload bytes are only ever touched
+inside the mapInPandas stage.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
@@ -32,12 +27,7 @@ __all__ = [
     "decode_png",
     "encode_jpeg",
     "decode_jpeg",
-    "encode_wav",
-    "decode_wav",
     "decode_image_features",
-    "decode_audio_features",
-    "resize_images",
-    "sample_video_frames",
 ]
 
 # canonical media-table layout: payload stays opaque binary; all filtering /
@@ -758,99 +748,6 @@ def decode_jpeg(payload: bytes):
     return np.clip(np.round(np.stack([r, g, b], axis=2)), 0, 255).astype(np.uint8)
 
 
-def _ulaw_encode(s16):
-    """G.711 μ-law compression: int16 → uint8 (the public spec formula —
-    bias 132, segment by leading-one position, complemented output)."""
-    import numpy as np
-
-    x = np.asarray(s16, dtype=np.int64)
-    sign = (x < 0).astype(np.uint8) * 0x80
-    mag = np.minimum(np.abs(x), 32635) + 132
-    exp = (np.floor(np.log2(mag)) - 7).astype(np.int64)  # 0..7 (mag >= 132)
-    mant = (mag >> (exp + 3)) & 0x0F
-    return (~(sign | (exp.astype(np.uint8) << 4) | mant.astype(np.uint8))).astype(
-        np.uint8
-    )
-
-
-def _ulaw_decode(u8):
-    """G.711 μ-law expansion: uint8 → int16."""
-    import numpy as np
-
-    u = ~np.asarray(u8, dtype=np.uint8)
-    sign = (u & 0x80) != 0
-    exp = ((u >> 4) & 0x07).astype(np.int64)
-    mant = (u & 0x0F).astype(np.int64)
-    mag = (((mant << 3) + 132) << exp) - 132
-    return np.where(sign, -mag, mag).astype(np.int16)
-
-
-def encode_wav(samples, sample_rate: int = 16000, fmt: str = "pcm16") -> bytes:
-    """Mono sample array → WAV bytes. ``fmt``: "pcm16" (int16 in),
-    "pcm8" (unsigned 8-bit), "float32" (IEEE float, samples in [-1, 1]),
-    or "ulaw" (G.711 μ-law, int16 in) — the container variants a real
-    audio corpus actually contains."""
-    import numpy as np
-
-    a = np.asarray(samples)
-    if fmt == "pcm16":
-        tag, bits, s = 1, 16, a.astype("<i2").tobytes()
-    elif fmt == "pcm8":
-        tag, bits = 1, 8
-        s = np.clip(a, 0, 255).astype(np.uint8).tobytes()
-    elif fmt == "float32":
-        tag, bits, s = 3, 32, a.astype("<f4").tobytes()
-    elif fmt == "ulaw":
-        tag, bits, s = 7, 8, _ulaw_encode(a).tobytes()
-    else:
-        raise ValueError(f"unknown WAV fmt {fmt!r}")
-    block = bits // 8
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(s), b"WAVE", b"fmt ", 16, tag, 1,
-        sample_rate, sample_rate * block, block, bits, b"data", len(s),
-    )
-    return hdr + s
-
-
-def decode_wav(payload: bytes):
-    """WAV bytes → (float64 mono samples in [-1, 1], sample_rate). Walks
-    RIFF chunks; 16/8-bit PCM, IEEE float32 and G.711 μ-law supported
-    (multi-channel folds to mono by mean)."""
-    import numpy as np
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, n = 12, len(payload)
-    fmt, rate, channels, bits, data = None, None, None, None, None
-    while pos + 8 <= n:
-        cid, clen = struct.unpack_from("<4sI", payload, pos)
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            fmt, channels, rate = struct.unpack_from("<HHI", body, 0)
-            bits = struct.unpack_from("<H", body, 14)[0]
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if rate is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    if fmt == 1 and bits == 16:
-        x = np.frombuffer(data, dtype="<i2").astype("float64") / 32768.0
-    elif fmt == 1 and bits == 8:  # unsigned PCM
-        x = (np.frombuffer(data, dtype=np.uint8).astype("float64") - 128.0) / 128.0
-    elif fmt == 3 and bits == 32:
-        x = np.frombuffer(data, dtype="<f4").astype("float64")
-    elif fmt == 7 and bits == 8:
-        x = _ulaw_decode(np.frombuffer(data, dtype=np.uint8)).astype("float64") / 32768.0
-    else:
-        raise NotImplementedError(
-            f"WAV fmt={fmt} bits={bits} (supported: PCM 8/16, float32, ulaw)"
-        )
-    if channels > 1:
-        x = x[: len(x) - len(x) % channels].reshape(-1, channels).mean(axis=1)
-    return x, rate
-
-
 def _to_rgb(arr):
     """(h, w, 1|3|4) → (h, w, 3): grayscale replicates, RGBA drops alpha."""
     import numpy as np
@@ -888,53 +785,17 @@ def _image_features(arr, dim: int) -> list[float]:
     return [round(float(v), 6) for v in feat]
 
 
-def _audio_features(x, rate: int, dim: int) -> list[float]:
-    """[duration_sec, rms, peak, zero-crossing rate] + (dim−4)-chunk
-    mean-abs envelope, zero-padded to ``dim``; 6-dp rounding."""
-    import numpy as np
-
-    n = len(x)
-    head = [
-        n / rate,
-        float(np.sqrt((x * x).mean())) if n else 0.0,
-        float(np.abs(x).max()) if n else 0.0,
-        float((np.signbit(x[1:]) != np.signbit(x[:-1])).mean()) if n > 1 else 0.0,
-    ]
-    k = max(dim - 4, 1)
-    env = []
-    if n:
-        edges = np.linspace(0, n, k + 1).astype(int)
-        env = [
-            float(np.abs(x[a:b]).mean()) if b > a else 0.0
-            for a, b in zip(edges[:-1], edges[1:])
-        ]
-    feat = head + env
-    feat = feat[:dim] + [0.0] * max(dim - len(feat), 0)
-    return [round(float(v), 6) for v in feat]
-
-
-def _fake_features(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in feature vector: sha256-seeded, unit-scaled."""
-    h = hashlib.sha256(payload or b"").digest()
-    raw = (h * ((dim * 4) // len(h) + 1))[: dim * 4]
-    return [
-        int.from_bytes(raw[i * 4 : (i + 1) * 4], "big") / 2**32 for i in range(dim)
-    ]
-
-
 def decode_image_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
     dim: int = 64,
-    fake: bool = False,
 ) -> DataFrame:
     """Decode images → feature vectors via mapInPandas (one Arrow batch in,
-    one out; payload column read only here). REAL decode for uncompressed
-    24-bit BMP payloads (stdlib+numpy, ``decode_bmp``); other formats
+    one out; payload column read only here). BMP, PNG and baseline JPEG
+    payloads decode with the stdlib+numpy codecs above; other formats
     dispatch to PIL when importable, else raise — never silently emit stub
-    vectors as if they were decoded features. ``fake=True`` bypasses
-    parsing entirely with the sha256-derived stand-in."""
+    vectors as if they were decoded features."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.StringType(), False),
@@ -957,8 +818,7 @@ def decode_image_features(
             from PIL import Image  # type: ignore[import-not-found]
         except ImportError:
             raise NotImplementedError(
-                "payload is not BMP/PNG/JPEG and PIL is unavailable "
-                "(pass fake=True for the deterministic stub)"
+                "payload is not BMP/PNG/JPEG and PIL is unavailable"
             ) from None
         arr = np.asarray(Image.open(io.BytesIO(p)).convert("RGB"))  # pragma: no cover
         return _image_features(arr, dim)  # pragma: no cover
@@ -967,160 +827,10 @@ def decode_image_features(
         import pandas as pd
 
         for pdf in batches:
-            if fake:
-                feats = [
-                    _fake_features(p, dim) if p is not None else None
-                    for p in pdf[payload_col]
-                ]
-            else:
-                feats = [
-                    decode_one(bytes(p)) if p is not None else None
-                    for p in pdf[payload_col]
-                ]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    return df.select(id_col, payload_col).mapInPandas(run, out_schema)
-
-
-def decode_audio_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    dim: int = 16,
-    fake: bool = False,
-) -> DataFrame:
-    """Decode audio → feature vectors (duration/rms/peak/zero-cross +
-    mean-abs envelope) via mapInPandas. REAL decode for 16-bit PCM WAV
-    (stdlib struct + numpy, ``decode_wav``); other containers raise.
-    Same batch contract as ``decode_image_features``."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType(), False),
-            T.StructField("features", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if fake:
-                feats = [
-                    _fake_features(p, dim) if p is not None else None
-                    for p in pdf[payload_col]
-                ]
-            else:
-                feats = [
-                    _audio_features(*decode_wav(bytes(p)), dim) if p is not None else None
-                    for p in pdf[payload_col]
-                ]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    return df.select(id_col, payload_col).mapInPandas(run, out_schema)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    payload_col: str = "payload",
-    fake: bool = False,
-) -> DataFrame:
-    """Resize images to (width, height). REAL for uncompressed 24-bit BMP
-    payloads: decode → nearest-neighbor index resample → re-encode as BMP
-    (pure numpy; deterministic). Non-BMP payloads raise unless ``fake``,
-    which substitutes the sha256-truncated placeholder payload. Metadata
-    dims are rewritten either way."""
-    schema = df.schema
-
-    def resize_one(p: bytes) -> bytes:
-        import numpy as np
-
-        if p[:2] == b"BM":
-            arr, enc = decode_bmp(p), encode_bmp
-        elif p[:8] == _PNG_MAGIC:
-            a = decode_png(p)
-            arr = np.repeat(a, 3, axis=2) if a.shape[2] == 1 else a
-            enc = encode_png
-        elif p[:2] == b"\xff\xd8":
-            arr, enc = decode_jpeg(p), encode_jpeg
-        else:
-            raise NotImplementedError(
-                "payload is not BMP/PNG/JPEG; real resize covers those "
-                "formats (pass fake=True for the stub)"
-            )
-        h, w = arr.shape[:2]
-        ys = np.linspace(0, h - 1, height).round().astype(int)
-        xs = np.linspace(0, w - 1, width).round().astype(int)
-        return enc(arr[np.ix_(ys, xs)])
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["width"] = width
-            pdf["height"] = height
-            if fake:
-                pdf[payload_col] = [
-                    None if p is None else hashlib.sha256(bytes(p)).digest()
-                    for p in pdf[payload_col]
-                ]
-            else:
-                pdf[payload_col] = [
-                    None if p is None else resize_one(bytes(p))
-                    for p in pdf[payload_col]
-                ]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    fake: bool = False,
-) -> DataFrame:
-    """Frame sampling: one output row per sampled timestamp (frame payload
-    stubbed). Output schema (media_id, ts_ms, frame) — the real decoder slots
-    in behind the same mapInPandas signature."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.StringType(), False),
-            T.StructField("ts_ms", T.LongType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-        ]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        if not fake:
-            raise NotImplementedError(
-                "video decode requires an AV library (not in this container); "
-                "pass fake=True for the deterministic stub"
-            )
-        for pdf in batches:
-            # vectorized row expansion: one repeat + one concatenated
-            # timestamp ramp per batch (no per-row Python loop); only the
-            # frame digests remain per-output-row work, which a real decoder
-            # replaces wholesale behind this same signature.
-            import numpy as np
-
-            dur = pdf["duration_ms"].fillna(0).astype("int64").to_numpy()
-            counts = np.maximum((dur + every_ms - 1) // every_ms, 0)
-            ids = pdf[id_col].to_numpy().repeat(counts)
-            ts = (
-                np.concatenate([np.arange(c, dtype="int64") for c in counts])
-                * every_ms
-                if counts.sum()
-                else np.array([], dtype="int64")
-            )
-            frames = [
-                hashlib.sha256(f"{i}@{t}".encode()).digest()
-                for i, t in zip(ids, ts)
+            feats = [
+                decode_one(bytes(p)) if p is not None else None
+                for p in pdf[payload_col]
             ]
-            yield pd.DataFrame({id_col: ids, "ts_ms": ts, "frame": frames})
+            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
-    return df.filter(F.col("kind") == "video").select(
-        id_col, "duration_ms"
-    ).mapInPandas(run, out_schema)
+    return df.select(id_col, payload_col).mapInPandas(run, out_schema)

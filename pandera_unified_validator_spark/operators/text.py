@@ -46,7 +46,6 @@ __all__ = [
     "fit_resample_dsir",
     "dsir_log_weights",
     "dsir_resample",
-    "analyze_text",
 ]
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, single non-alnum marks
@@ -1319,25 +1318,3 @@ def fit_resample_dsir(
     )
     lw = _dsir_weight_rows(g, model, id_col, keep_cols)
     return model, _gumbel_topk(lw, k, id_col, seed, keep_cols)
-
-
-def analyze_text(
-    df: DataFrame, text_col: str = "text", prefix: str = ""
-) -> DataFrame:
-    """Annotate a corpus with all text signals in one codegen pass —
-    counts, ratios, 15-language ID, quality score, Gopher gate verdict,
-    URL count, and the order-sensitive fingerprint."""
-    feats = quality_features(text_col)
-    return df.select(
-        "*",
-        feats["n_words"].alias(f"{prefix}n_words"),
-        token_count_regex(text_col).alias(f"{prefix}n_tokens_bpe"),
-        feats["mean_word_len"].alias(f"{prefix}mean_word_len"),
-        feats["stopword_ratio"].alias(f"{prefix}stopword_ratio"),
-        feats["punct_ratio"].alias(f"{prefix}punct_ratio"),
-        language_id(text_col).alias(f"{prefix}lang_pred"),
-        quality_score(text_col).alias(f"{prefix}quality"),
-        gopher_quality_flags(text_col)["passes"].alias(f"{prefix}gopher_passes"),
-        F.size(extract_urls(text_col)).alias(f"{prefix}n_urls"),
-        fingerprint(text_col).alias(f"{prefix}fingerprint"),
-    )

@@ -2536,11 +2536,10 @@ FROM red GROUP BY source ORDER BY source
 
 
 def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL image codec under the driver gate (round 4 — the fake-codec
-    plumbing query stays separately gated): 8×6 24-bit BMPs are synthesized
-    from pure pixel arithmetic (pixel(i,y,x,c) = (31·i + 7·y + 3·x + 11·c)
-    mod 256), round-tripped through ``encode_bmp`` → Spark binary column →
-    ``decode_image_features(fake=False)`` (stdlib+numpy BMP parser), and
+    """The real image codec under the driver gate: 8×6 24-bit BMPs are
+    synthesized from pure pixel arithmetic (pixel(i,y,x,c) = (31·i + 7·y +
+    3·x + 11·c) mod 256), round-tripped through ``encode_bmp`` → Spark
+    binary column → ``decode_image_features`` (stdlib+numpy BMP parser), and
     the per-channel pixel SUMS are recovered from the feature vector
     (integer-exact, so no float-rounding boundary risk). The oracle never
     parses BMP — it recomputes the sums straight from the pixel formula,
@@ -2567,7 +2566,7 @@ def q_multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("media_id"),
         make_bmp("doc_id").alias("payload"),
     )
-    feats = decode_image_features(media, dim=8, fake=False)
+    feats = decode_image_features(media, dim=8)
     n_px = W * H
     return feats.select(
         F.col("media_id").cast("long").alias("media_id"),

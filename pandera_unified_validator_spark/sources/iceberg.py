@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = [
     "iceberg_available",
     "read_iceberg",
-    "iceberg_partitions",
     "current_snapshot_id",
 ]
 
@@ -89,10 +88,3 @@ def current_snapshot_id(spark: SparkSession, table: str) -> int:
         raise ValueError(f"iceberg table {table!r} has no snapshots")
     return int(row[0])
 
-
-def iceberg_partitions(spark: SparkSession, table: str) -> DataFrame:
-    """The ``.partitions`` metadata table — the group list for the
-    partition-group validation loop (replaces file-listing groups)."""
-    if not iceberg_available(spark):
-        raise NotImplementedError("Iceberg runtime jar not available (see read_iceberg)")
-    return spark.read.table(f"{table}.partitions")

@@ -20,6 +20,7 @@ unfinished work re-runs.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -33,6 +34,8 @@ from ..operators.validator import SparkValidator
 from ..utils.reporting import ValidationMetrics, ValidationReport
 
 __all__ = ["GroupResult", "StreamingResult", "PartitionedValidationRunner"]
+
+_LOG = logging.getLogger(__name__)
 
 
 @dataclass
@@ -84,6 +87,11 @@ class PartitionedValidationRunner:
     One validator serves every group, so what it resolves once (the compiled
     schema, small referential dimensions) is shared by the whole run; group
     reads use the table's schema (see ``run``).
+
+    Each group is validated on its own, so a ``unique=True`` column is
+    checked within each group only: a key repeated in two groups is not
+    flagged. A call with more than one group and such a column logs a
+    warning saying so.
     """
 
     def __init__(
@@ -194,6 +202,14 @@ class PartitionedValidationRunner:
         lineage (nothing loaded or written, ``GroupResult.files == ()``).
         The breaker stops scheduling further units once the error rate trips
         (reference core/streaming.py:424-426)."""
+        unique_cols = [c.name for c in self.validator.schema.columns.values() if c.unique]
+        if unique_cols and len(units) > 1:
+            _LOG.warning(
+                "unique on %s is checked within each of %d groups only: a key "
+                "repeated in two groups is not flagged",
+                ", ".join(unique_cols),
+                len(units),
+            )
         metrics = ValidationMetrics()
         out = StreamingResult(metrics=metrics)
         t_start = time.time()

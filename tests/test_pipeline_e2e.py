@@ -14,7 +14,6 @@ from pandera_unified_validator_spark.operators.dedup import (
 )
 from pandera_unified_validator_spark.operators.sampling import stratified_sample
 from pandera_unified_validator_spark.operators.text import (
-    analyze_text,
     redact_pii,
     repetition_scores,
 )

@@ -580,3 +580,29 @@ def test_dataframe_groups_share_the_group_loop(spark, tmp_path):
     assert res.metrics.early_terminated and not res.is_valid
     assert len(res.groups) == 2 and calls == [(1, 3), (2, 3)]
     assert res.metrics.total_rows == 20
+
+
+@pytest.mark.parametrize("fpg, warns", [(1, True), (2, False)])
+def test_runner_warns_unique_is_per_group(spark, tmp_path, caplog, fpg, warns):
+    """unique is checked within each group only: with more than one group
+    the runner says so, once per run; with one group it stays quiet. Two
+    files share 10 doc_ids, so only the one-group run sees them."""
+    import logging
+
+    p = str(tmp_path / "shared_ids")
+    for ids in (range(0, 40), range(30, 50)):
+        spark.createDataFrame([(i, 1.0) for i in ids], "doc_id int, value double").coalesce(
+            1
+        ).write.mode("append").parquet(p)
+    schema = SchemaBuilder("u").column("doc_id", "int", unique=True).column("value", "float").build()
+    runner = PartitionedValidationRunner(
+        SparkValidator(schema), files_per_group=fpg, error_threshold=None
+    )
+    with caplog.at_level(logging.WARNING, logger="pandera_unified_validator_spark"):
+        res = runner.run(spark, p)
+    warned = [r for r in caplog.records if "within each" in r.message]
+    assert len(warned) == (1 if warns else 0)
+    if warns:
+        assert "doc_id" in warned[0].message
+    # what the warning is about: only one group over both files finds them
+    assert res.metrics.invalid_rows == (0 if warns else 20)

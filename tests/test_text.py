@@ -5,9 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandera_unified_validator_spark.operators.text import (
-    analyze_text,
     fingerprint,
     language_id,
+    quality_features,
     quality_score,
     token_count_regex,
     token_count_whitespace,
@@ -32,10 +32,19 @@ def test_token_counts(spark):
     assert rows[0]["bpe"] == 3
 
 
-def test_token_count_regex_splits_mixed(spark):
+def test_token_count_regex_splits_mixed(spark, docs):
     df = spark.createDataFrame([("abc123, def!",)], "t string")
     # abc | 123 | , | def | ! → 5
     assert df.select(token_count_regex("t").alias("n")).collect()[0]["n"] == 5
+    # on the documents table every word splits into at least one piece, and
+    # quality_features' n_chars equals the table's n_chars column
+    feats = quality_features("text")
+    bad = docs.select(
+        F.sum((token_count_regex("text") < feats["n_words"]).cast("int")).alias("short"),
+        F.sum((feats["n_chars"] != F.col("n_chars")).cast("int")).alias("chars"),
+        F.min(feats["n_words"]).alias("min_words"),
+    ).first()
+    assert bad["short"] == 0 and bad["chars"] == 0 and bad["min_words"] > 0
 
 
 def test_language_id_markers(spark):
@@ -88,18 +97,6 @@ def test_fingerprint_properties(spark):
     assert fps[0] == fps[2]          # case/whitespace-normalized
     assert fps[0] != fps[3]          # order-sensitive
     assert fps[0] != fps[4]          # content-sensitive
-
-
-def test_analyze_text_on_documents(spark, docs):
-    out = analyze_text(docs, "text")
-    row = out.filter(F.col("doc_id") == 0).collect()[0]
-    assert row["n_words"] > 0
-    assert row["n_tokens_bpe"] >= row["n_words"]
-    assert 0.0 <= row["quality"] <= 1.0
-    assert row["lang_pred"] is not None
-    # n_chars column in the table must equal length(text) — sanity vs corpus
-    bad = out.filter(F.length("text") != F.col("n_chars")).count()
-    assert bad == 0
 
 
 def test_words_null_and_empty(spark):
