@@ -103,6 +103,11 @@ def _dup_counts(df: DataFrame, col: str) -> DataFrame:
     )
 
 
+def _input_columns(df: DataFrame, group: str | None) -> list[str]:
+    """``df``'s columns without the runner's group tag."""
+    return [c for c in df.columns if c != group]
+
+
 def _unpivot(wide: DataFrame, flag_names: Sequence[str], *keep: str) -> DataFrame:
     """``wide``'s per-check fail-count columns as ``(check, n_failed)`` rows
     beside the ``keep`` expressions (a NULL check when there are none)."""
@@ -155,6 +160,9 @@ class ValidationResult:
     flags: DataFrame
     checks: tuple[str, ...]                   # flag column names (no prefix)
     verdicts: DataFrame                        # per-partition × check counts (long)
+    # the collected rows of ``verdicts``' aggregate, one per partition:
+    # {"partition_id": .., "n_rows": .., "n_invalid_rows": .., <check>: n_failed}
+    partition_counts: tuple[dict[str, Any], ...] = ()
 
     @property
     def is_valid(self) -> bool:
@@ -340,7 +348,11 @@ class SparkValidator:
 
     # ------------------------------------------------------------------ #
     def annotate(
-        self, df: DataFrame, _skip_unique: bool = False
+        self,
+        df: DataFrame,
+        _skip_unique: bool = False,
+        _unique_over: DataFrame | None = None,
+        _group: str | None = None,
     ) -> tuple[DataFrame, list[CompiledCheck], list[str]]:
         """Input df → df + one boolean flag column per check (TRUE = pass).
 
@@ -350,8 +362,16 @@ class SparkValidator:
         ``_skip_unique`` omits the unique-join flags entirely — the
         count-only ``check_counts`` path computes unique totals as direct
         aggregates instead (no dup-key materialization, no join-back).
+
+        Two hooks serve the partition-group runner, which validates a slice
+        of a larger table. ``_unique_over`` is a DataFrame holding the
+        ``unique`` columns of that whole table (a superset of ``df``'s
+        rows): the dup keys are counted over it, and its size picks the
+        join-back tier. ``_group`` names a column of ``df`` that is not
+        input: it becomes the partition id, and the schema is compiled and
+        strict-checked without it.
         """
-        compiled = self._compiled(df.columns)
+        compiled = self._compiled(_input_columns(df, _group))
         global_checks = compiled.global_checks
         if _skip_unique:
             global_checks = [g for g in global_checks if g.check != "unique"]
@@ -361,9 +381,12 @@ class SparkValidator:
         for cached in self._persisted:
             _cache.release(cached)
         self._persisted = []
-        annotated = df.withColumn(_PID, F.spark_partition_id()).select(
-            "*", *compiled.flag_cols
+        tagged = (
+            df.withColumnRenamed(_group, _PID)
+            if _group
+            else df.withColumn(_PID, F.spark_partition_id())
         )
+        annotated = tagged.select("*", *compiled.flag_cols)
         names: list[CompiledCheck] = list(compiled.row_checks)
 
         # unique (C8): dup-key set via partial-agg groupBy → broadcast join.
@@ -386,9 +409,10 @@ class SparkValidator:
                 self.warnings.append(msg)
                 continue
             col = g.column
-            dup_keys = _dup_counts(df, col).select(F.col(col).alias("__dup_key"))
+            over = df if _unique_over is None else _unique_over
+            dup_keys = _dup_counts(over, col).select(F.col(col).alias("__dup_key"))
             use_broadcast = True
-            size = _plan_size_bytes(df)
+            size = _plan_size_bytes(over)
             if size is None or size > _DUP_KEY_CAP * 8:
                 # the eager job is the column-pruned scan + map-side-combined
                 # groupBy the join-back needs anyway, so the exact count adds
@@ -439,20 +463,29 @@ class SparkValidator:
         return annotated, names, compiled.missing
 
     # ------------------------------------------------------------------ #
-    def validate(self, df: DataFrame) -> ValidationResult:
+    def validate(
+        self,
+        df: DataFrame,
+        _unique_over: DataFrame | None = None,
+        _group: str | None = None,
+    ) -> ValidationResult:
+        """Validate ``df``; the private hooks are ``annotate``'s."""
         t0 = time.time()
+        columns = _input_columns(df, _group)
         schema_errors = [
-            f"column {m!r} missing from input" for m in self._compiled(df.columns).missing
+            f"column {m!r} missing from input" for m in self._compiled(columns).missing
         ]
         schema_errors += dtype_errors(self.schema, df)
         if self.schema.strict:
-            extra = set(df.columns) - set(self.schema.columns)
+            extra = set(columns) - set(self.schema.columns)
             schema_errors += [f"unexpected column {c!r} (strict mode)" for c in sorted(extra)]
 
-        annotated, checks, _missing = self.annotate(df)
+        annotated, checks, _missing = self.annotate(
+            df, _unique_over=_unique_over, _group=_group
+        )
         flag_names = [c.name for c in checks]
 
-        pid = F.col(self.partition_by) if self.partition_by else F.col(_PID)
+        pid = F.col(self.partition_by) if self.partition_by and not _group else F.col(_PID)
         # ONE aggregation job: per-partition totals + per-check fail counts.
         wide = annotated.groupBy(pid.alias("partition_id")).agg(*self.fail_counts(flag_names))
         # long-format verdict DataFrame for downstream use / persistence
@@ -543,6 +576,7 @@ class SparkValidator:
             flags=annotated,
             checks=tuple(flag_names),
             verdicts=verdicts,
+            partition_counts=tuple(r.asDict() for r in rows),
         )
         if self.fail_fast and not report.is_valid:
             raise ValidationFailedError(report)

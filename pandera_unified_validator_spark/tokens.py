@@ -140,8 +140,11 @@ def token_table(
 
 
 def source_dim(spark: SparkSession) -> DataFrame:
-    """The allowed-values dimension table for the referential check."""
-    return spark.createDataFrame([(s,) for s in SOURCES], "source string")
+    """The allowed-values dimension table for the referential check. It is a
+    ``VALUES`` relation planned in the JVM, not a Python RDD, so reading its
+    keys runs locally on the driver and starts no job."""
+    rows = ", ".join(f"('{s}')" for s in SOURCES)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(source)")
 
 
 def token_schema():

@@ -95,7 +95,7 @@ def test_clamp_fix_preserves_nulls(spark):
     assert sorted(got, key=lambda v: (v is None, v)) == [2.0, 3.0, 4.0, None]
 
 
-def test_real_bmp_decode_resize_roundtrip(spark):
+def test_real_bmp_decode_roundtrip(spark):
     """REAL image codec (round 4): synthesized 24-bit BMPs decode through
     the Spark pipeline to the exact feature values computed locally."""
     import numpy as np
@@ -195,7 +195,7 @@ def test_png_grayscale_and_tiny_edges():
             assert (decode_png(encode_png(a, ft)) == a).all(), (shape, ft)
 
 
-def test_bmp_topdown_and_wav_roundtrip_properties():
+def test_bmp_topdown_roundtrip_properties():
     """Pure-codec branch: a hand-built TOP-DOWN BMP (negative height —
     our encoder only writes bottom-up) decodes to the right orientation."""
     import struct
@@ -279,7 +279,7 @@ def test_jpeg_round_trip_and_spec_golden():
         decode_jpeg(bytes(prog))
 
 
-def test_jpeg_feeds_feature_and_resize_paths(spark):
+def test_jpeg_feeds_feature_path(spark):
     """JPEG payloads flow through the real mapInPandas decode stage
     exactly like BMP/PNG."""
     import numpy as np

@@ -455,12 +455,12 @@ def test_runner_groups_match_whole_table_and_skip_inference(spark, tmp_path):
         validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
         validate = validator.validate
 
-        def tagged(df, validate=validate):
+        def tagged(df, validate=validate, **hooks):
             # the validation's own jobs go to another group: what is left
             # in "reads" is what the runner's reads start
             sc.setJobGroup("validate", "validate")
             try:
-                return validate(df)
+                return validate(df, **hooks)
             finally:
                 sc.setJobGroup(f"reads_{fpg}", "reads")
 
@@ -489,40 +489,58 @@ def test_runner_partitioned_layout_reads_partition_columns(spark, tmp_path):
     whole = v.validate(spark.read.parquet(p)).report
     res = PartitionedValidationRunner(v, files_per_group=1, error_threshold=None).run(spark, p)
     assert len(res.groups) > 1 and res.report.errors == ()
-    # unique is per group, so compare the row-local and referential checks
-    got = {c: n for c, n in res.metrics.common_errors.items() if "unique" not in c}
-    want = {c.name: c.n_failed for c in whole.checks if c.n_failed and c.check != "unique"}
-    assert res.metrics.total_rows == whole.n_rows and got == want
+    want = {c.name: c.n_failed for c in whole.checks if c.n_failed}
+    assert res.metrics.total_rows == whole.n_rows
+    assert dict(res.metrics.common_errors) == want
     assert want["source__referential"] > 0
 
 
 def test_lineage_record_from_earlier_version_resumes(spark, tmp_path):
     """The schema fingerprint is pinned: a lineage record written with the
-    same contract by an earlier version of the runner still resumes."""
+    same contract by an earlier version of the runner still resumes when
+    the schema has no unique column. Such a record has no
+    ``unique_scope``: it counted unique within its group only, so with a
+    unique column its group is validated again."""
     p = str(tmp_path / "tok")
     token_table(spark, 400, dirty=True, num_partitions=1).write.parquet(p)
     files = sorted(spark.read.parquet(p).inputFiles())
-    ckpt = tmp_path / "ckpt"
-    ckpt.mkdir()
-    record = {
-        "group_id": 0,
-        "files": files,
-        "n_rows": 400,
-        "n_invalid_rows": 3,
-        "check_fails": {"n_tok__le": 3},
-        "elapsed_sec": 1.0,
-        "schema_fp": "1274ad0571b99e44",
-    }
-    (ckpt / "group-000000.json").write_text(json.dumps(record))
-    runner = PartitionedValidationRunner(
-        SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)}),
-        checkpoint_dir=str(ckpt),
-        error_threshold=None,
-    )
-    assert runner._schema_fingerprint() == "1274ad0571b99e44"
-    res = runner.run(spark, p)
-    assert [g.resumed for g in res.groups] == [True]
-    assert _totals(res.metrics) == (400, 3, {"n_tok__le": 3})
+    with_unique = token_schema()
+    no_unique = token_schema()
+    no_unique.columns["doc_id"].unique = False
+    for schema, fp, resumes in (
+        (no_unique, "08d770df729f01f5", True),
+        (with_unique, "1274ad0571b99e44", False),
+    ):
+        ckpt = tmp_path / f"ckpt_{fp}"
+        ckpt.mkdir()
+        record = {
+            "group_id": 0,
+            "files": files,
+            "n_rows": 400,
+            "n_invalid_rows": 3,
+            "check_fails": {"n_tok__le": 3},
+            "elapsed_sec": 1.0,
+            "schema_fp": fp,
+        }
+        (ckpt / "group-000000.json").write_text(json.dumps(record))
+        validator = SparkValidator(schema, ref_checks={"source": source_dim(spark)})
+        runner = PartitionedValidationRunner(
+            validator, checkpoint_dir=str(ckpt), error_threshold=None
+        )
+        assert runner._schema_fingerprint() == fp
+        res = runner.run(spark, p)
+        assert [g.resumed for g in res.groups] == [resumes]
+        if resumes:
+            assert _totals(res.metrics) == (400, 3, {"n_tok__le": 3})
+        else:
+            whole = validator.validate(spark.read.parquet(p)).report
+            assert _totals(res.metrics) == (
+                400,
+                whole.n_invalid_rows,
+                {c.name: c.n_failed for c in whole.checks if c.n_failed},
+            )
+            rewritten = json.loads((ckpt / "group-000000.json").read_text())
+            assert rewritten["unique_scope"] == "run"
 
 
 @pytest.mark.parametrize("fpg", [0, -1])
@@ -582,27 +600,158 @@ def test_dataframe_groups_share_the_group_loop(spark, tmp_path):
     assert res.metrics.total_rows == 20
 
 
-@pytest.mark.parametrize("fpg, warns", [(1, True), (2, False)])
-def test_runner_warns_unique_is_per_group(spark, tmp_path, caplog, fpg, warns):
-    """unique is checked within each group only: with more than one group
-    the runner says so, once per run; with one group it stays quiet. Two
-    files share 10 doc_ids, so only the one-group run sees them."""
-    import logging
+def _write_shared_ids(spark, p):
+    """Four dirty token files, then a fifth that repeats ten doc_ids of the
+    others: the repeats straddle files whatever the file order."""
+    token_table(spark, 2000, dirty=True, num_partitions=4).write.parquet(p)
+    df = spark.read.parquet(p)
+    repeats = df.filter(F.col("doc_id").isNotNull()).orderBy("doc_id").limit(10).collect()
+    spark.createDataFrame(repeats, df.schema).coalesce(1).write.mode("append").parquet(p)
+
+
+@pytest.mark.parametrize("fpg", [1, 2, 5])
+def test_runner_checks_unique_over_the_run(spark, tmp_path, fpg):
+    """A doc_id repeated across files is flagged whatever files_per_group
+    is, cold and after a resume that lost every other lineage record: the
+    runner's totals and per-check counts equal one validate() of the whole
+    path, and so does its report."""
+    p = str(tmp_path / "shared_ids")
+    _write_shared_ids(spark, p)
+    validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+    whole = validator.validate(spark.read.parquet(p)).report
+    want = (
+        whole.n_rows,
+        whole.n_invalid_rows,
+        {c.name: c.n_failed for c in whole.checks if c.n_failed},
+    )
+    assert want[2]["doc_id__unique"] >= 20
+    ckpt = tmp_path / "ckpt"
+    runner = PartitionedValidationRunner(
+        validator, checkpoint_dir=str(ckpt), files_per_group=fpg, error_threshold=None
+    )
+    cold = runner.run(spark, p)
+    assert len(cold.groups) == -(-5 // fpg)
+    for path in sorted(ckpt.glob("group-*.json"))[::2]:
+        path.unlink()
+    resumed = runner.run(spark, p)
+    assert sum(g.resumed for g in resumed.groups) == len(cold.groups) // 2
+    for res in (cold, resumed):
+        assert _totals(res.metrics) == want
+    merged = {c.name: c.n_failed for c in cold.report.checks if c.n_failed}
+    assert (cold.report.n_rows, cold.report.n_invalid_rows, merged) == want
+
+
+def test_submit_job_violations_match_the_report(spark, tmp_path, monkeypatch):
+    """``tools/submit_job.py --violations`` writes exactly the rows its
+    report counts as invalid, also when duplicate doc_ids straddle file
+    groups."""
+    import importlib.util
+    import sys
 
     p = str(tmp_path / "shared_ids")
-    for ids in (range(0, 40), range(30, 50)):
-        spark.createDataFrame([(i, 1.0) for i in ids], "doc_id int, value double").coalesce(
-            1
-        ).write.mode("append").parquet(p)
-    schema = SchemaBuilder("u").column("doc_id", "int", unique=True).column("value", "float").build()
-    runner = PartitionedValidationRunner(
-        SparkValidator(schema), files_per_group=fpg, error_threshold=None
+    _write_shared_ids(spark, p)
+    tool = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "submit_job.py")
+    spec = importlib.util.spec_from_file_location("submit_job", tool)
+    submit_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit_job)
+    out, report = str(tmp_path / "violations"), str(tmp_path / "report.json")
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        ["submit_job.py", "--input", p, "--files-per-group", "1",
+         "--violations", out, "--report", report],
     )
-    with caplog.at_level(logging.WARNING, logger="pandera_unified_validator_spark"):
-        res = runner.run(spark, p)
-    warned = [r for r in caplog.records if "within each" in r.message]
-    assert len(warned) == (1 if warns else 0)
-    if warns:
-        assert "doc_id" in warned[0].message
-    # what the warning is about: only one group over both files finds them
-    assert res.metrics.invalid_rows == (0 if warns else 20)
+    assert submit_job.main() == 1
+    with open(report) as f:
+        invalid = json.load(f)["metrics"]["invalid_rows"]
+    assert invalid > 0 and spark.read.parquet(out).count() == invalid
+
+
+def test_runner_group_tag_survives_uri_encoded_paths(spark, tmp_path):
+    """A partitioned layout under a directory whose name holds a space and a
+    '%': each row's group is found from its file's URI, so no row is left
+    without a group (the runner raises on one) and the totals at one file
+    per group equal validate() of the whole path."""
+    root = str(tmp_path / "odd dir %41")
+    token_table(spark, 1200, dirty=True, num_partitions=2).withColumn(
+        "k", (F.col("n_tok") % 2).cast("int")
+    ).write.partitionBy("k").parquet(root)
+    v = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+    whole = v.validate(spark.read.parquet(root)).report
+    res = PartitionedValidationRunner(v, files_per_group=1, error_threshold=None).run(
+        spark, root
+    )
+    assert len(res.groups) >= 4 and all(g.n_rows > 0 for g in res.groups)
+    assert _totals(res.metrics) == (
+        whole.n_rows,
+        whole.n_invalid_rows,
+        {c.name: c.n_failed for c in whole.checks if c.n_failed},
+    )
+
+
+def test_runner_wave_costs_the_jobs_of_one_group(spark, tmp_path):
+    """Unfinished groups are validated in one wave: a cold run of four
+    groups starts as many validation jobs as a run of one group."""
+    p = str(tmp_path / "tok")
+    token_table(spark, 2000, dirty=True, num_partitions=4).write.parquet(p)
+    sc = spark.sparkContext
+
+    def validation_jobs(fpg):
+        group = f"wave_validate_{fpg}"
+        validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+        validator.validate(spark.read.parquet(p))  # resolve the dimension first
+        validate = validator.validate
+
+        def tagged(df, **hooks):
+            sc.setJobGroup(group, group)
+            try:
+                return validate(df, **hooks)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        validator.validate = tagged
+        res = PartitionedValidationRunner(
+            validator, files_per_group=fpg, error_threshold=None
+        ).run(spark, p)
+        assert len(res.groups) == 4 // fpg
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert validation_jobs(1) == validation_jobs(4) > 0
+
+
+def test_breaker_folds_a_wave_group_by_group(spark, parquet_dir, tmp_path):
+    """Early stop inside a wave reports exactly what a group-at-a-time loop
+    would: the same groups, metrics, callbacks and lineage records, and no
+    group after the one that tripped the breaker."""
+    files = sorted(spark.read.parquet(parquet_dir).inputFiles())
+    groups = [files[i : i + 2] for i in range(0, len(files), 2)]
+    reader = spark.read.schema(spark.read.parquet(parquet_dir).schema)
+    want_groups, want_calls, seen = [], [], [0, 0]
+    for gi, g in enumerate(groups):
+        rep = SparkValidator(stream_schema()).validate(reader.load(g)).report
+        fails = {c.name: c.n_failed for c in rep.checks if c.n_failed}
+        want_groups.append((gi, tuple(g), rep.n_rows, rep.n_invalid_rows, fails))
+        seen[0] += rep.n_rows
+        seen[1] += rep.n_invalid_rows
+        want_calls.append((gi + 1, len(groups), seen[0]))
+        if seen[1] / seen[0] > 0.05:
+            break
+
+    ckpt = tmp_path / "ckpt"
+    calls = []
+    res = PartitionedValidationRunner(
+        SparkValidator(stream_schema()),
+        checkpoint_dir=str(ckpt),
+        error_threshold=0.05,
+        files_per_group=2,
+        progress_callback=lambda i, n, m: calls.append((i, n, m.total_rows)),
+    ).run(spark, parquet_dir)
+    got = [(g.group_id, g.files, g.n_rows, g.n_invalid_rows, g.check_fails) for g in res.groups]
+    assert got == want_groups and calls == want_calls
+    assert res.metrics.early_terminated and res.metrics.chunks_processed == len(want_groups)
+    assert (res.metrics.total_rows, res.metrics.invalid_rows) == tuple(seen)
+    assert (res.report.n_rows, res.report.n_invalid_rows) == tuple(seen)
+    records = sorted(ckpt.glob("group-*.json"))
+    assert [json.loads(r.read_text())["group_id"] for r in records] == [
+        g[0] for g in want_groups
+    ]

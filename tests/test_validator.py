@@ -457,6 +457,22 @@ def test_small_dimension_read_once_per_validator(spark, tmp_path):
         df.unpersist()
 
 
+def test_source_dim_is_planned_in_the_jvm(spark):
+    """The allowed-values dimension is built without a Python RDD: its
+    analyzed plan holds no LogicalRDD, reading it starts no job, and it has
+    one string column ``source`` holding each allowed source once."""
+    from pandera_unified_validator_spark.tokens import SOURCES
+
+    dim = source_dim(spark)
+    plan = dim._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    assert [(f.name, f.dataType.simpleString()) for f in dim.schema.fields] == [
+        ("source", "string")
+    ]
+    rows, n_jobs = _jobs_in_group(spark, "source_dim", dim.collect)
+    assert sorted(r[0] for r in rows) == sorted(SOURCES) and n_jobs == 0
+
+
 @pytest.mark.parametrize(
     "fact, fact_type, keys, key_type, n_bad",
     [
