@@ -269,6 +269,10 @@ class SparkValidator:
         # dup-key sets cached by the eager unique tier; released on the next
         # annotate() (unpersist only drops the cache — recompute is safe)
         self._persisted: list[DataFrame] = []
+        # the last ``_unique_over`` and its {check: (dup keys, broadcast?)},
+        # kept while annotate() is passed the same DataFrame again
+        self._dup_over: DataFrame | None = None
+        self._dup_keys: dict[str, tuple[DataFrame, bool]] = {}
         # per-validator invariants, resolved on first use: the compiled
         # schema per input column list, the row-ok/verdict columns per flag
         # list, and each dimension's inline key test (None = join tier)
@@ -367,9 +371,12 @@ class SparkValidator:
         of a larger table. ``_unique_over`` is a DataFrame holding the
         ``unique`` columns of that whole table (a superset of ``df``'s
         rows): the dup keys are counted over it, and its size picks the
-        join-back tier. ``_group`` names a column of ``df`` that is not
-        input: it becomes the partition id, and the schema is compiled and
-        strict-checked without it.
+        join-back tier. Its dup-key sets are kept while later calls pass the
+        same DataFrame, and persisted on the first reuse, so a run of several
+        slices scans the key columns at most twice. ``_group`` names a column
+        of ``df`` that is not input: it becomes the partition id, the schema
+        is compiled and strict-checked without it, and each failing sample
+        carries it.
         """
         compiled = self._compiled(_input_columns(df, _group))
         global_checks = compiled.global_checks
@@ -378,9 +385,11 @@ class SparkValidator:
         self.unique_join_plan = {}
         self.referential_plan = {}
         self.warnings = []
-        for cached in self._persisted:
-            _cache.release(cached)
-        self._persisted = []
+        if _unique_over is None or _unique_over is not self._dup_over:
+            for cached in self._persisted:
+                _cache.release(cached)
+            self._persisted = []
+            self._dup_over, self._dup_keys = _unique_over, {}
         tagged = (
             df.withColumnRenamed(_group, _PID)
             if _group
@@ -409,18 +418,26 @@ class SparkValidator:
                 self.warnings.append(msg)
                 continue
             col = g.column
-            over = df if _unique_over is None else _unique_over
-            dup_keys = _dup_counts(over, col).select(F.col(col).alias("__dup_key"))
-            use_broadcast = True
-            size = _plan_size_bytes(over)
-            if size is None or size > _DUP_KEY_CAP * 8:
-                # the eager job is the column-pruned scan + map-side-combined
-                # groupBy the join-back needs anyway, so the exact count adds
-                # no input scan (round 3's separate approx_count_distinct
-                # estimate job was a third scan: +64% check_unique wall)
-                dup_keys = _cache.persist(dup_keys, f"SparkValidator.dup_keys.{g.name}")
-                self._persisted.append(dup_keys)
-                use_broadcast = dup_keys.count() <= _DUP_KEY_CAP
+            label = f"SparkValidator.dup_keys.{g.name}"
+            if g.name in self._dup_keys:
+                dup_keys, use_broadcast = self._dup_keys[g.name]
+                if not dup_keys.is_cached:
+                    self._persisted.append(_cache.persist(dup_keys, label))
+            else:
+                over = df if _unique_over is None else _unique_over
+                dup_keys = _dup_counts(over, col).select(F.col(col).alias("__dup_key"))
+                use_broadcast = True
+                size = _plan_size_bytes(over)
+                if size is None or size > _DUP_KEY_CAP * 8:
+                    # the eager job is the column-pruned scan + map-side-
+                    # combined groupBy the join-back needs anyway, so the
+                    # exact count adds no input scan (round 3's separate
+                    # approx_count_distinct estimate job was a third scan:
+                    # +64% check_unique wall)
+                    dup_keys = _cache.persist(dup_keys, label)
+                    self._persisted.append(dup_keys)
+                    use_broadcast = dup_keys.count() <= _DUP_KEY_CAP
+                self._dup_keys[g.name] = (dup_keys, use_broadcast)
             self.unique_join_plan[g.name] = "broadcast" if use_broadcast else "shuffle"
             annotated = annotated.join(
                 F.broadcast(dup_keys) if use_broadcast else dup_keys,
@@ -515,9 +532,10 @@ class SparkValidator:
                         + [c.column for c in failed if c.column]
                     )
                 )
+                tag = [F.col(_PID).alias(_group)] if _group else []
                 branches = [
                     annotated.filter(~F.col(FLAG_PREFIX + c.name))
-                    .select(F.lit(c.name).alias("__chk"), *unified)
+                    .select(F.lit(c.name).alias("__chk"), *unified, *tag)
                     .limit(self.max_samples)
                     for c in failed
                 ]
@@ -527,7 +545,9 @@ class SparkValidator:
                     grouped.setdefault(d.pop("__chk"), []).append(d)
                 for c in failed:
                     cols = dict.fromkeys(
-                        list(self.key_columns) + ([c.column] if c.column else [])
+                        list(self.key_columns)
+                        + ([c.column] if c.column else [])
+                        + ([_group] if _group else [])
                     )
                     # NOTE: must not rebind `rows` — it still holds the
                     # per-partition verdict rows used for n_partitions below

@@ -540,7 +540,8 @@ def test_lineage_record_from_earlier_version_resumes(spark, tmp_path):
                 {c.name: c.n_failed for c in whole.checks if c.n_failed},
             )
             rewritten = json.loads((ckpt / "group-000000.json").read_text())
-            assert rewritten["unique_scope"] == "run"
+            assert "unique_scope" in rewritten
+            assert [g.resumed for g in runner.run(spark, p).groups] == [True]
 
 
 @pytest.mark.parametrize("fpg", [0, -1])
@@ -755,3 +756,100 @@ def test_breaker_folds_a_wave_group_by_group(spark, parquet_dir, tmp_path):
     assert [json.loads(r.read_text())["group_id"] for r in records] == [
         g[0] for g in want_groups
     ]
+
+
+def test_runner_revalidates_unique_groups_after_an_append(spark, tmp_path):
+    """A file appended to the path after a run holds doc_ids of the earlier
+    files. Every group's unique counts change, so no record resumes, and the
+    totals equal validate() of the whole path; without a unique column the
+    unchanged groups still resume."""
+    p = str(tmp_path / "tok")
+    token_table(spark, 1600, dirty=True, num_partitions=4).write.parquet(p)
+    df = spark.read.parquet(p)
+    repeats = df.filter(F.col("doc_id").isNotNull()).orderBy("doc_id").limit(10).collect()
+    extra = str(tmp_path / "extra")
+    spark.createDataFrame(repeats, df.schema).coalesce(1).write.parquet(extra)
+    (part,) = [f for f in os.listdir(extra) if f.endswith(".parquet")]
+    no_unique = token_schema()
+    no_unique.columns["doc_id"].unique = False
+    runners = {}
+    for schema, resumed in ((token_schema(), 0), (no_unique, 4)):
+        validator = SparkValidator(schema, ref_checks={"source": source_dim(spark)})
+        runner = PartitionedValidationRunner(
+            validator,
+            checkpoint_dir=str(tmp_path / f"ckpt_{resumed}"),
+            files_per_group=1,
+            error_threshold=None,
+        )
+        assert len(runner.run(spark, p).groups) == 4
+        runners[resumed] = validator, runner
+    # the appended file sorts last, so the first four groups keep their files
+    os.replace(os.path.join(extra, part), os.path.join(p, "part-99999-append.parquet"))
+    for resumed, (validator, runner) in runners.items():
+        res = runner.run(spark, p)
+        whole = validator.validate(spark.read.parquet(p)).report
+        assert len(res.groups) == 5 and sum(g.resumed for g in res.groups) == resumed
+        assert _totals(res.metrics) == (
+            whole.n_rows,
+            whole.n_invalid_rows,
+            {c.name: c.n_failed for c in whole.checks if c.n_failed},
+        )
+
+
+def test_runner_waves_share_one_dup_key_set(spark, tmp_path, monkeypatch):
+    """Twelve groups make two waves. The dup keys are counted once per call
+    and kept for the second wave, and the totals equal validate() of the
+    whole path, cold and half-resumed."""
+    import pandera_unified_validator_spark.operators.validator as vmod
+    from pandera_unified_validator_spark.utils.cache import registry
+
+    p = str(tmp_path / "tok")
+    token_table(spark, 2200, dirty=True, num_partitions=11).write.parquet(p)
+    df = spark.read.parquet(p)
+    repeats = df.filter(F.col("doc_id").isNotNull()).orderBy("doc_id").limit(10).collect()
+    spark.createDataFrame(repeats, df.schema).coalesce(1).write.mode("append").parquet(p)
+    validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
+    whole = validator.validate(spark.read.parquet(p)).report
+    want = (
+        whole.n_rows,
+        whole.n_invalid_rows,
+        {c.name: c.n_failed for c in whole.checks if c.n_failed},
+    )
+    assert want[2]["doc_id__unique"] >= 20
+    calls = []
+    dup_counts = vmod._dup_counts
+    monkeypatch.setattr(vmod, "_dup_counts", lambda *a: calls.append(a) or dup_counts(*a))
+    ckpt = tmp_path / "ckpt"
+    runner = PartitionedValidationRunner(
+        validator, checkpoint_dir=str(ckpt), files_per_group=1, error_threshold=None
+    )
+    cold = runner.run(spark, p)
+    assert len(cold.groups) == 12 and len(calls) == 1
+    assert "SparkValidator.dup_keys.doc_id__unique" in registry.labels()
+    for path in sorted(ckpt.glob("group-*.json"))[::2]:
+        path.unlink()
+    resumed = runner.run(spark, p)
+    assert sum(g.resumed for g in resumed.groups) == 6 and len(calls) == 2
+    for res in (cold, resumed):
+        assert _totals(res.metrics) == want
+
+
+def test_wave_samples_stay_with_their_group(spark):
+    """Failing samples are drawn from the whole wave, and each goes to the
+    group that holds its row: after an early stop the report shows no
+    sample of a group it does not report."""
+    schema = "id int, name string, value double"
+    batches = [
+        spark.createDataFrame([(i, f"n{i}", 1.0) for i in range(1, 11)], schema),
+        spark.createDataFrame([(100 + i, "m", -1.0 if i == 0 else 1.0) for i in range(5)], schema),
+        spark.createDataFrame([(200 + i, "z", -1.0) for i in range(10)], schema),
+    ]
+    res = PartitionedValidationRunner(
+        SparkValidator(
+            stream_schema(), key_columns=("id",), collect_samples=True, max_samples=20
+        ),
+        error_threshold=0.05,
+    ).run_dataframe_groups(spark, batches)
+    assert res.metrics.early_terminated and len(res.groups) == 2
+    (check,) = [c for c in res.report.checks if c.n_failed]
+    assert check.samples == ({"id": 100, "value": -1.0},)
