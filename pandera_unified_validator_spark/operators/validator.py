@@ -173,7 +173,7 @@ class ValidationResult:
         """The columns ``annotate`` added to the input."""
         return [FLAG_PREFIX + c for c in self.checks] + [ROW_OK, _PID]
 
-    def violations(self, include_flags: bool = False) -> DataFrame:
+    def violations(self) -> DataFrame:
         """Invalid rows + ``failed_checks array<string>`` (P5/P6 analogue)."""
         failed_names = F.array_compact(
             F.array(
@@ -184,9 +184,7 @@ class ValidationResult:
             )
         )
         out = self.flags.filter(~F.col(ROW_OK)).withColumn("failed_checks", failed_names)
-        if not include_flags:
-            out = out.drop(*self._internal)
-        return out
+        return out.drop(*self._internal)
 
     def flat_violations(self) -> DataFrame:
         """``violations()`` with ``failed_checks`` as one string of the
@@ -269,10 +267,6 @@ class SparkValidator:
         # dup-key sets cached by the eager unique tier; released on the next
         # annotate() (unpersist only drops the cache — recompute is safe)
         self._persisted: list[DataFrame] = []
-        # the last ``_unique_over`` and its {check: (dup keys, broadcast?)},
-        # kept while annotate() is passed the same DataFrame again
-        self._dup_over: DataFrame | None = None
-        self._dup_keys: dict[str, tuple[DataFrame, bool]] = {}
         # per-validator invariants, resolved on first use: the compiled
         # schema per input column list, the row-ok/verdict columns per flag
         # list, and each dimension's inline key test (None = join tier)
@@ -350,12 +344,38 @@ class SparkValidator:
             self._ref_inline[col] = inline
         return self._ref_inline[col]
 
+    def _dup_key_sets(self, over: DataFrame, keep: bool) -> dict[str, tuple[DataFrame, bool]]:
+        """``{check: (dup keys, broadcast?)}`` for each ``unique`` check of
+        ``over``'s columns. ``over``'s plan-estimated size and exact dup-key
+        count pick the join-back tier (see ``_DUP_KEY_CAP``); the eager tier
+        persists its set, and ``keep`` persists every set, so that later
+        joins read it from the cache. The caller releases what is cached."""
+        uniques = [g for g in self._compiled(over.columns).global_checks if g.check == "unique"]
+        size = _plan_size_bytes(over) if uniques else None
+        out = {}
+        for g in uniques:
+            label = f"SparkValidator.dup_keys.{g.name}"
+            dup_keys = _dup_counts(over, g.column).select(F.col(g.column).alias("__dup_key"))
+            use_broadcast = True
+            if size is None or size > _DUP_KEY_CAP * 8:
+                # the eager job is the column-pruned scan + map-side-
+                # combined groupBy the join-back needs anyway, so the
+                # exact count adds no input scan (round 3's separate
+                # approx_count_distinct estimate job was a third scan:
+                # +64% check_unique wall)
+                dup_keys = _cache.persist(dup_keys, label)
+                use_broadcast = dup_keys.count() <= _DUP_KEY_CAP
+            elif keep:
+                dup_keys = _cache.persist(dup_keys, label)
+            out[g.name] = (dup_keys, use_broadcast)
+        return out
+
     # ------------------------------------------------------------------ #
     def annotate(
         self,
         df: DataFrame,
         _skip_unique: bool = False,
-        _unique_over: DataFrame | None = None,
+        _dup_keys: Mapping[str, tuple[DataFrame, bool]] | None = None,
         _group: str | None = None,
     ) -> tuple[DataFrame, list[CompiledCheck], list[str]]:
         """Input df → df + one boolean flag column per check (TRUE = pass).
@@ -368,15 +388,13 @@ class SparkValidator:
         aggregates instead (no dup-key materialization, no join-back).
 
         Two hooks serve the partition-group runner, which validates a slice
-        of a larger table. ``_unique_over`` is a DataFrame holding the
-        ``unique`` columns of that whole table (a superset of ``df``'s
-        rows): the dup keys are counted over it, and its size picks the
-        join-back tier. Its dup-key sets are kept while later calls pass the
-        same DataFrame, and persisted on the first reuse, so a run of several
-        slices scans the key columns at most twice. ``_group`` names a column
-        of ``df`` that is not input: it becomes the partition id, the schema
-        is compiled and strict-checked without it, and each failing sample
-        carries it.
+        of a larger table. ``_dup_keys`` is the ``_dup_key_sets`` of that
+        whole table, which the runner counts once per call and releases when
+        the call returns; without it the dup keys are counted over ``df``
+        and an eager-tier set stays cached until the next call. ``_group``
+        names a column of ``df`` that is not input: it becomes the partition
+        id, the schema is compiled and strict-checked without it, and each
+        failing sample carries it.
         """
         compiled = self._compiled(_input_columns(df, _group))
         global_checks = compiled.global_checks
@@ -385,11 +403,9 @@ class SparkValidator:
         self.unique_join_plan = {}
         self.referential_plan = {}
         self.warnings = []
-        if _unique_over is None or _unique_over is not self._dup_over:
-            for cached in self._persisted:
-                _cache.release(cached)
-            self._persisted = []
-            self._dup_over, self._dup_keys = _unique_over, {}
+        for cached in self._persisted:
+            _cache.release(cached)
+        self._persisted = []
         tagged = (
             df.withColumnRenamed(_group, _PID)
             if _group
@@ -417,27 +433,11 @@ class SparkValidator:
                 _LOG.warning(msg)
                 self.warnings.append(msg)
                 continue
+            if _dup_keys is None:
+                _dup_keys = self._dup_key_sets(df, keep=False)
+                self._persisted = [d for d, _ in _dup_keys.values() if d.is_cached]
             col = g.column
-            label = f"SparkValidator.dup_keys.{g.name}"
-            if g.name in self._dup_keys:
-                dup_keys, use_broadcast = self._dup_keys[g.name]
-                if not dup_keys.is_cached:
-                    self._persisted.append(_cache.persist(dup_keys, label))
-            else:
-                over = df if _unique_over is None else _unique_over
-                dup_keys = _dup_counts(over, col).select(F.col(col).alias("__dup_key"))
-                use_broadcast = True
-                size = _plan_size_bytes(over)
-                if size is None or size > _DUP_KEY_CAP * 8:
-                    # the eager job is the column-pruned scan + map-side-
-                    # combined groupBy the join-back needs anyway, so the
-                    # exact count adds no input scan (round 3's separate
-                    # approx_count_distinct estimate job was a third scan:
-                    # +64% check_unique wall)
-                    dup_keys = _cache.persist(dup_keys, label)
-                    self._persisted.append(dup_keys)
-                    use_broadcast = dup_keys.count() <= _DUP_KEY_CAP
-                self._dup_keys[g.name] = (dup_keys, use_broadcast)
+            dup_keys, use_broadcast = _dup_keys[g.name]
             self.unique_join_plan[g.name] = "broadcast" if use_broadcast else "shuffle"
             annotated = annotated.join(
                 F.broadcast(dup_keys) if use_broadcast else dup_keys,
@@ -483,7 +483,7 @@ class SparkValidator:
     def validate(
         self,
         df: DataFrame,
-        _unique_over: DataFrame | None = None,
+        _dup_keys: Mapping[str, tuple[DataFrame, bool]] | None = None,
         _group: str | None = None,
     ) -> ValidationResult:
         """Validate ``df``; the private hooks are ``annotate``'s."""
@@ -497,9 +497,7 @@ class SparkValidator:
             extra = set(columns) - set(self.schema.columns)
             schema_errors += [f"unexpected column {c!r} (strict mode)" for c in sorted(extra)]
 
-        annotated, checks, _missing = self.annotate(
-            df, _unique_over=_unique_over, _group=_group
-        )
+        annotated, checks, _missing = self.annotate(df, _dup_keys=_dup_keys, _group=_group)
         flag_names = [c.name for c in checks]
 
         pid = F.col(self.partition_by) if self.partition_by and not _group else F.col(_PID)

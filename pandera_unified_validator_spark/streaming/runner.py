@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.validator import SparkValidator
+from ..utils.cache import registry as _cache
 from ..utils.reporting import ValidationMetrics, ValidationReport
 
 __all__ = ["GroupResult", "StreamingResult", "PartitionedValidationRunner"]
@@ -55,6 +56,13 @@ def _unique_scope(markers: Sequence[tuple[str, ...] | None]) -> str:
     return hashlib.sha256(basis.encode()).hexdigest()[:16]
 
 
+def _isin(key: Column, values: Sequence[Any]) -> Column:
+    """``key IN (values)``, null-safe: a NULL key is in ``values`` when
+    ``None`` is (``IN`` alone matches no NULL key)."""
+    test = key.isin([v for v in values if v is not None])
+    return key.isNull() | test if None in values else test
+
+
 def _group_of(key: Column, groups: Mapping[int, Sequence[Any]]) -> Column:
     """The index of the group whose values hold ``key``, NULL when none
     does. Each group is one ``IN`` test, a hash-set probe past 10 values,
@@ -63,9 +71,9 @@ def _group_of(key: Column, groups: Mapping[int, Sequence[Any]]) -> Column:
     4M-row scan on 4 cores."""
     first, *rest = groups.items()
     return reduce(
-        lambda acc, kv: acc.when(key.isin(list(kv[1])), kv[0]),
+        lambda acc, kv: acc.when(_isin(key, kv[1]), kv[0]),
         rest,
-        F.when(key.isin(list(first[1])), first[0]),
+        F.when(_isin(key, first[1]), first[0]),
     )
 
 
@@ -95,7 +103,7 @@ class StreamingResult:
     """Reference ``StreamingResult`` analogue (core/streaming.py:430-436).
 
     ``metrics`` and ``groups`` cover every group, resumed or not; ``report``
-    merges only the groups validated in this call (None when all resumed).
+    covers only the groups validated in this call (None when all resumed).
     """
 
     metrics: ValidationMetrics
@@ -105,6 +113,40 @@ class StreamingResult:
     @property
     def is_valid(self) -> bool:
         return self.metrics.invalid_rows == 0 and not self.metrics.early_terminated
+
+
+def _call_report(
+    waves: Sequence[ValidationReport], done: Sequence[GroupResult]
+) -> ValidationReport | None:
+    """The report of the groups ``done`` in this call, from the reports of
+    its ``waves`` (None when no wave ran): each check's counts are summed
+    from the groups, its samples are those of the groups, and the schema
+    errors and warnings are the last wave's."""
+    if not waves:
+        return None
+    ids = {g.group_id for g in done}
+    samples = [(c.name, s) for w in waves for c in w.checks for s in c.samples if s[_GROUP] in ids]
+    n_rows = sum(g.n_rows for g in done)
+    checks = tuple(
+        replace(
+            chk,
+            n_failed=sum(g.check_fails.get(chk.name, 0) for g in done),
+            n_checked=n_rows,
+            samples=tuple(
+                {k: v for k, v in s.items() if k != _GROUP}
+                for name, s in samples
+                if name == chk.name
+            ),
+        )
+        for chk in waves[-1].checks
+    )
+    return replace(
+        waves[-1],
+        is_valid=not waves[-1].errors and all(chk.passed for chk in checks),
+        checks=checks,
+        n_rows=n_rows,
+        n_invalid_rows=sum(g.n_invalid_rows for g in done),
+    )
 
 
 class PartitionedValidationRunner:
@@ -124,18 +166,21 @@ class PartitionedValidationRunner:
     of that wave was already validated. A killed wave loses all its groups.
 
     A ``unique=True`` column is checked over every group of the call,
-    resumed or not: its dup keys are counted over all of them by the first
-    wave and kept for the later ones, so a call scans the key columns at
-    most twice, a key repeated in two groups is flagged in both, and a
-    resumed run rescans only the key columns. Each lineage record stores a
-    hash of the call's groups (``unique_scope``); with a ``unique`` column,
-    a record resumes only in a call over the same groups, so a file added
-    to ``path`` validates every group again.
+    resumed or not: the call counts its dup-key set once, over all of them,
+    and every wave joins it back, so a call scans the key columns once, a
+    key repeated in two groups is flagged in both, and a resumed run
+    rescans only the key columns. A call of two or more waves caches the
+    set and releases it when it returns. Each lineage record stores a hash
+    of the call's groups (``unique_scope``); with a ``unique`` column, a
+    record resumes only in a call over the same groups, so a file added to
+    ``path`` validates every group again.
 
     A group's ``elapsed_sec`` is its row share of its wave's wall time, so
-    the groups' times still add up to the time spent validating. Failing
-    samples (``collect_samples``) are drawn from the wave, at most
-    ``max_samples`` per check, and each is reported with its own group.
+    the groups' times still add up to the time spent validating. The
+    call's ``report`` is built once, when it returns, from the groups it
+    validated: their check counts, the failing samples (``collect_samples``,
+    drawn from each wave, at most ``max_samples`` per check) of their rows,
+    and the last wave's schema errors and warnings, each listed once.
     A ``fail_fast`` validator raises on a wave holding an invalid group
     before any group of that wave writes its lineage record.
 
@@ -265,15 +310,13 @@ class PartitionedValidationRunner:
         gids: Sequence[int],
         markers: Sequence[tuple[str, ...] | None],
         load_wave: Callable[[Sequence[int]], DataFrame],
-        unique_over: DataFrame | None,
-    ) -> dict[int, tuple[GroupResult, ValidationReport]]:
-        """Validate groups ``gids`` with one read and one ``validate``; each
-        group's result and report come from its row of the verdict
+        dup_keys: Mapping[str, tuple[DataFrame, bool]],
+    ) -> tuple[ValidationReport, list[GroupResult]]:
+        """Validate groups ``gids`` with one read and one ``validate``: the
+        wave's report, and each group's result from its row of the verdict
         aggregate."""
         t0 = time.time()
-        res = self.validator.validate(
-            load_wave(gids), _unique_over=unique_over, _group=_GROUP
-        )
+        res = self.validator.validate(load_wave(gids), _dup_keys=dup_keys, _group=_GROUP)
         wave_s = time.time() - t0
         wave = res.report
         by_group = {c["partition_id"]: c for c in res.partition_counts}
@@ -284,41 +327,17 @@ class PartitionedValidationRunner:
                 f"{wave.n_rows - sum(rows)} of {wave.n_rows} rows of groups "
                 f"{list(gids)} carry no group index"
             )
-        out = {}
-        for i, (gi, c) in enumerate(zip(gids, counts)):
-            checks = tuple(
-                replace(
-                    chk,
-                    n_failed=c.get(chk.name, 0),
-                    n_checked=rows[i],
-                    samples=tuple(
-                        {k: v for k, v in s.items() if k != _GROUP}
-                        for s in chk.samples
-                        if s[_GROUP] == gi
-                    ),
-                )
-                for chk in wave.checks
-            )
-            report = replace(
-                wave,
-                is_valid=not wave.errors and all(chk.passed for chk in checks),
-                checks=checks,
-                n_rows=rows[i],
+        return wave, [
+            GroupResult(
+                group_id=gi,
+                files=tuple(markers[gi] or ()),
+                n_rows=n,
                 n_invalid_rows=c.get("n_invalid_rows", 0),
+                check_fails={chk.name: c[chk.name] for chk in wave.checks if c.get(chk.name)},
+                elapsed_sec=round(wave_s * (n / wave.n_rows if wave.n_rows else 1 / len(gids)), 3),
             )
-            share = rows[i] / wave.n_rows if wave.n_rows else 1 / len(gids)
-            out[gi] = (
-                GroupResult(
-                    group_id=gi,
-                    files=tuple(markers[gi] or ()),
-                    n_rows=report.n_rows,
-                    n_invalid_rows=report.n_invalid_rows,
-                    check_fails={chk.name: chk.n_failed for chk in checks if chk.n_failed},
-                    elapsed_sec=round(wave_s * share, 3),
-                ),
-                report,
-            )
-        return out
+            for gi, c, n in zip(gids, counts, rows)
+        ]
 
     def _run_units(
         self,
@@ -343,35 +362,39 @@ class PartitionedValidationRunner:
             pending[i]: pending[i : i + _WAVE_GROUPS]
             for i in range(0, len(pending), _WAVE_GROUPS)
         }
-        reports: dict[int, ValidationReport] = {}
         metrics = ValidationMetrics()
         out = StreamingResult(metrics=metrics)
         t_start = time.time()
-        report: ValidationReport | None = None
-        for gi, marker in enumerate(markers):
-            if gi in waves:
-                for gj, (gr, rep) in self._validate_wave(
-                    waves[gi], markers, load_wave, unique_over
-                ).items():
-                    groups[gj], reports[gj] = gr, rep
-            gr = groups[gi]
-            if not gr.resumed:
-                if marker is not None:
+        reports: list[ValidationReport] = []
+        dup_keys = {}
+        try:
+            if waves and unique_over is not None:
+                dup_keys = self.validator._dup_key_sets(unique_over, keep=len(waves) > 1)
+            for gi, marker in enumerate(markers):
+                if gi in waves:
+                    report, results = self._validate_wave(waves[gi], markers, load_wave, dup_keys)
+                    reports.append(report)
+                    for gr in results:
+                        groups[gr.group_id] = gr
+                gr = groups[gi]
+                if not gr.resumed and marker is not None:
                     self._write_lineage(gr, scope)
-                report = reports[gi] if report is None else report.merge(reports[gi])
-            metrics.update(gr.n_rows - gr.n_invalid_rows, gr.n_invalid_rows, gr.check_fails)
-            out.groups.append(gr)
-            if self.progress_callback:
-                self.progress_callback(gi + 1, len(markers), metrics)
-            if (
-                self.error_threshold is not None
-                and metrics.total_rows > 0
-                and metrics.error_rate > self.error_threshold
-            ):
-                metrics.early_terminated = True
-                break
+                metrics.update(gr.n_rows - gr.n_invalid_rows, gr.n_invalid_rows, gr.check_fails)
+                out.groups.append(gr)
+                if self.progress_callback:
+                    self.progress_callback(gi + 1, len(markers), metrics)
+                if (
+                    self.error_threshold is not None
+                    and metrics.total_rows > 0
+                    and metrics.error_rate > self.error_threshold
+                ):
+                    metrics.early_terminated = True
+                    break
+        finally:
+            for keys, _ in dup_keys.values():
+                _cache.release(keys)
         metrics.elapsed_sec = round(time.time() - t_start, 3)
-        out.report = report
+        out.report = _call_report(reports, [g for g in out.groups if not g.resumed])
         return out
 
     def run(
@@ -422,8 +445,6 @@ class PartitionedValidationRunner:
         partition_col: str,
         snapshot_id: int | None = None,
         partitions: Sequence[Any] | None = None,
-        read_fn: Callable[..., DataFrame] | None = None,
-        resolve_snapshot_fn: Callable[[SparkSession, str], int] | None = None,
     ) -> StreamingResult:
         """Partition-group validation over an Iceberg table PINNED at a
         snapshot — the north rule's resumable loop against a moving table.
@@ -438,10 +459,8 @@ class PartitionedValidationRunner:
         the ``.partitions`` metadata table's values to skip it — on a real
         catalog that list comes from metadata, not a scan). A wave's filter
         is ``partition_col IN (its values)``, partition-pruned by Iceberg at
-        scan time, so a wave job reads only its partitions' files.
-        ``read_fn`` defaults to ``sources.iceberg.read_iceberg`` and is
-        injectable for catalogs the test environment lacks; ``resolve_snapshot_fn`` likewise defaults to
-        ``sources.iceberg.current_snapshot_id``.
+        scan time, so a wave job reads only its partitions' files; a NULL
+        partition value matches the rows whose ``partition_col`` is NULL.
 
         ``snapshot_id=None`` is resolved to the table's CURRENT snapshot up
         front and the resolved value is embedded in both the read and every
@@ -449,15 +468,11 @@ class PartitionedValidationRunner:
         (round 4 wrote ``@None``) would let a resume skip partitions even
         though the unpinned table had moved between runs, breaking the
         exactly-once-vs-moving-table guarantee this loop exists for."""
-        if read_fn is None:
-            from ..sources.iceberg import read_iceberg as read_fn  # type: ignore[no-redef]
+        from ..sources import iceberg
+
         if snapshot_id is None:
-            if resolve_snapshot_fn is None:
-                from ..sources.iceberg import (  # type: ignore[no-redef]
-                    current_snapshot_id as resolve_snapshot_fn,
-                )
-            snapshot_id = int(resolve_snapshot_fn(spark, table))
-        df = read_fn(spark, table, snapshot_id=snapshot_id)
+            snapshot_id = int(iceberg.current_snapshot_id(spark, table))
+        df = iceberg.read_iceberg(spark, table, snapshot_id=snapshot_id)
         if partitions is None:
             partitions = [
                 r[0]
@@ -467,10 +482,10 @@ class PartitionedValidationRunner:
 
         def load_wave(gids: Sequence[int]) -> DataFrame:
             tag = _group_of(col, {gi: [partitions[gi]] for gi in gids})
-            return df.filter(col.isin([partitions[gi] for gi in gids])).withColumn(_GROUP, tag)
+            return df.filter(_isin(col, [partitions[gi] for gi in gids])).withColumn(_GROUP, tag)
 
         markers = [(f"iceberg://{table}@{snapshot_id}#{partition_col}={pv}",) for pv in partitions]
-        unique_over = self._unique_over(df.filter(col.isin(list(partitions))))
+        unique_over = self._unique_over(df.filter(_isin(col, partitions)))
         return self._run_units(markers, load_wave, unique_over)
 
     def run_dataframe_groups(

@@ -15,7 +15,7 @@ from __future__ import annotations
 import json
 import time
 from collections import Counter
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Any, Mapping, Sequence
 
 __all__ = [
@@ -56,7 +56,7 @@ class CheckResult:
 
 @dataclass
 class ValidationReport:
-    """Mergeable validation outcome (reference utils/reporting.py:21-68)."""
+    """Validation outcome (reference utils/reporting.py:21-68)."""
 
     is_valid: bool = True
     checks: tuple[CheckResult, ...] = ()
@@ -65,31 +65,6 @@ class ValidationReport:
     metadata: dict[str, Any] = field(default_factory=dict)
     n_rows: int = 0
     n_invalid_rows: int = 0
-
-    # -- merge (reference utils/reporting.py:58-65: AND validity, sum) ------
-    def merge(self, other: "ValidationReport") -> "ValidationReport":
-        """Combine reports over DISJOINT inputs (per-group/per-chunk runs):
-        row totals and invalid totals both sum, keeping the implied error
-        rate consistent. A check present in both reports is listed once,
-        with its failed and checked counts summed and samples concatenated."""
-        checks = {c.name: c for c in self.checks}
-        for c in other.checks:
-            prev = checks.get(c.name)
-            checks[c.name] = c if prev is None else replace(
-                prev,
-                n_failed=prev.n_failed + c.n_failed,
-                n_checked=prev.n_checked + c.n_checked,
-                samples=prev.samples + c.samples,
-            )
-        return ValidationReport(
-            is_valid=self.is_valid and other.is_valid,
-            checks=tuple(checks.values()),
-            errors=self.errors + other.errors,
-            warnings=self.warnings + other.warnings,
-            metadata={**self.metadata, **other.metadata},
-            n_rows=self.n_rows + other.n_rows,
-            n_invalid_rows=self.n_invalid_rows + other.n_invalid_rows,
-        )
 
     @property
     def failed_checks(self) -> list[CheckResult]:
@@ -315,11 +290,6 @@ td,th{{border:1px solid #ccc;padding:4px 10px}}tr.fail{{background:#fdd}}
             "metadata": dict(self.metadata),
             "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-
-    def to_rows(self) -> list[dict[str, Any]]:
-        """K4 (reference utils/reporting.py:263-282): errors as records —
-        callers build a Spark/pandas DataFrame from these."""
-        return [c.to_dict() for c in self.checks]
 
 
 @dataclass

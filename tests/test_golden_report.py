@@ -152,30 +152,3 @@ def test_html_report_escapes_caller_data():
     assert "report &lt;col" in html             # title escaped
     assert "&quot;x&quot;" in html or "&#x27;" in html or '\\"x\\"' in html
 
-
-def test_merged_report_lists_each_check_once():
-    """Per-group reports merge check-by-name: the runner's whole-run report
-    sums each check's counts instead of listing it once per group."""
-    from pandera_unified_validator_spark.utils.reporting import (
-        CheckResult,
-        ValidationReport,
-    )
-
-    def group(n_rows, n_bad, samples):
-        return ValidationReport(
-            is_valid=not n_bad,
-            checks=(
-                CheckResult("doc_id__not_null", "doc_id", "not_null", 0, n_rows),
-                CheckResult("n_tok__ge", "n_tok", "ge", n_bad, n_rows, samples),
-            ),
-            n_rows=n_rows,
-            n_invalid_rows=n_bad,
-        )
-
-    merged = group(100, 5, ("a",)).merge(group(40, 2, ("b",)))
-    summary = merged.to_dict()["summary"]
-    assert summary["n_checks"] == 2 and summary["n_failed_checks"] == 1
-    assert summary["top_errors"] == [("n_tok__ge", 7)]
-    assert summary["errors_by_column"] == {"n_tok": 7}
-    ge = {c.name: c for c in merged.checks}["n_tok__ge"]
-    assert (ge.n_checked, ge.samples) == (140, ("a", "b"))

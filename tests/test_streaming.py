@@ -347,6 +347,45 @@ def test_iceberg_unpinned_run_resolves_current_snapshot(spark, tmp_path, monkeyp
     assert r3.metrics.total_rows == 9 and r3.metrics.invalid_rows == 1
 
 
+def test_iceberg_null_partition_is_validated(spark, tmp_path, monkeypatch):
+    """A NULL partition value is a group of its own: its rows are read,
+    tagged and counted like any other partition's, so the runner reports
+    what validate() of the snapshot reports."""
+    import pandera_unified_validator_spark.sources.iceberg as ice
+
+    snapshot = spark.createDataFrame(
+        [(1, "a", 1.0), (2, None, -1.0), (3, None, -2.0)],
+        "id int, part string, value double",
+    )
+    monkeypatch.setattr(ice, "read_iceberg", lambda spark_, table, **kw: snapshot)
+    schema = SchemaBuilder("t").column("id", "int").column("value", "float", ge=0.0).build()
+    whole = SparkValidator(schema).validate(snapshot).report
+    res = PartitionedValidationRunner(SparkValidator(schema), error_threshold=None).run_iceberg(
+        spark, "lake.db.tokens", partition_col="part", snapshot_id=1
+    )
+    assert (whole.n_rows, whole.n_invalid_rows) == (3, 2)
+    assert (res.metrics.total_rows, res.metrics.invalid_rows) == (3, 2)
+    assert sorted(g.n_rows for g in res.groups) == [1, 2]
+
+
+def test_runner_report_lists_each_schema_error_once(spark, tmp_path):
+    """A column the schema wants is missing from every group: the runner's
+    report names it once, as validate() of the whole path does, not once
+    per group."""
+    p = str(tmp_path / "rows")
+    spark.createDataFrame(
+        [(i, float(i)) for i in range(1, 41)], "id int, value double"
+    ).repartition(4).write.parquet(p)
+    validator = SparkValidator(stream_schema())
+    whole = validator.validate(spark.read.parquet(p)).report
+    res = PartitionedValidationRunner(validator, files_per_group=1, error_threshold=None).run(
+        spark, p
+    )
+    assert len(res.groups) >= 4
+    assert whole.errors == ("column 'name' missing from input",)
+    assert res.report.errors == whole.errors
+
+
 def test_read_orc_roundtrip(spark, tmp_path):
     from pandera_unified_validator_spark.sources.readers import read_orc
 
@@ -615,7 +654,7 @@ def test_runner_checks_unique_over_the_run(spark, tmp_path, fpg):
     """A doc_id repeated across files is flagged whatever files_per_group
     is, cold and after a resume that lost every other lineage record: the
     runner's totals and per-check counts equal one validate() of the whole
-    path, and so does its report."""
+    path, and so does its report, which lists each check once."""
     p = str(tmp_path / "shared_ids")
     _write_shared_ids(spark, p)
     validator = SparkValidator(token_schema(), ref_checks={"source": source_dim(spark)})
@@ -640,6 +679,7 @@ def test_runner_checks_unique_over_the_run(spark, tmp_path, fpg):
         assert _totals(res.metrics) == want
     merged = {c.name: c.n_failed for c in cold.report.checks if c.n_failed}
     assert (cold.report.n_rows, cold.report.n_invalid_rows, merged) == want
+    assert [c.name for c in cold.report.checks] == [c.name for c in whole.checks]
 
 
 def test_submit_job_violations_match_the_report(spark, tmp_path, monkeypatch):
@@ -796,10 +836,25 @@ def test_runner_revalidates_unique_groups_after_an_append(spark, tmp_path):
         )
 
 
+def _input_records(spark, group):
+    """Rows read from files or cached blocks by the jobs of job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    attempts = [store.lastStageAttempt(s) for s in stages]
+    return sum(a.inputRecords() for a in attempts if a.status().toString() == "COMPLETE")
+
+
 def test_runner_waves_share_one_dup_key_set(spark, tmp_path, monkeypatch):
-    """Twelve groups make two waves. The dup keys are counted once per call
-    and kept for the second wave, and the totals equal validate() of the
-    whole path, cold and half-resumed."""
+    """Twelve groups make two waves. The dup keys are counted once per call:
+    a cold call reads the key column once besides the rows of its waves.
+    The second wave reads the set from the cache, which the call releases
+    when it returns. The totals equal validate() of the whole path, cold
+    and half-resumed."""
+    from collections import Counter
+
     import pandera_unified_validator_spark.operators.validator as vmod
     from pandera_unified_validator_spark.utils.cache import registry
 
@@ -823,9 +878,18 @@ def test_runner_waves_share_one_dup_key_set(spark, tmp_path, monkeypatch):
     runner = PartitionedValidationRunner(
         validator, checkpoint_dir=str(ckpt), files_per_group=1, error_threshold=None
     )
-    cold = runner.run(spark, p)
+    sc = spark.sparkContext
+    before = Counter(registry.labels())  # other validators' sets may be cached
+    sc.setJobGroup("two_waves", "two_waves")
+    try:
+        cold = runner.run(spark, p)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(cold.groups) == 12 and len(calls) == 1
-    assert "SparkValidator.dup_keys.doc_id__unique" in registry.labels()
+    assert not Counter(registry.labels()) - before
+    # each wave reads its own rows, the key scan all of them, and the
+    # second wave's join reads the small cached set
+    assert 2 * whole.n_rows <= _input_records(spark, "two_waves") < 3 * whole.n_rows
     for path in sorted(ckpt.glob("group-*.json"))[::2]:
         path.unlink()
     resumed = runner.run(spark, p)
